@@ -1,10 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  }
+  import Json.escape
 
   /** The two artifact JSON lines (full per-query dict, compact
     * headline) from the per-query sample vectors — shared by the
@@ -34,7 +31,7 @@ object Bench {
       .mkString("{", ",", "}")
     val cold = firstRun.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
+    val es = errors.map { case (k, v) => "\"" + escape(k) + "\":\"" + escape(v) + "\"" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val coldTotal = if (firstRun.nonEmpty) firstRun.values.sum else 0.0
@@ -62,7 +59,7 @@ object Bench {
     val slowest = results.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val esShort = errors.map { case (k, v) =>
-      "\"" + esc(k) + "\":\"" + esc(v.take(80)) + "\""
+      "\"" + escape(k) + "\":\"" + escape(v.take(80)) + "\""
     }.mkString("{", ",", "}")
     // warm-semantics marker (VERDICT r9 #2 / next-round #5): since r9,
     // CacheScope.releaseAll runs after EVERY rep — a rep never serves a
@@ -101,11 +98,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the bench session IS the product session (GraftSession wires the
-    // extensions + AQE/FAIR confs the engine is designed around) — the
-    // r3 hand-rolled builder measured a subtly different config
-    val spark = GraftSession.local(cpus.toInt)
+    // the bench times the product session: the same extensions and
+    // AQE/FAIR confs that users and the Verify gate run
+    val spark = GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect() // session warmup
     // min-of-N timed runs per query (VERDICT r2 #8): one loaded/
     // GC-noisy run can no longer distort the committed artifact; the
@@ -130,8 +125,7 @@ object Bench {
     // covers even a kill.
     // The artifact discloses `runs_completed` so cross-round compares
     // know which semantics they are reading. Committed sweeps raise
-    // the wall (tools/sweep_r15.sh) so the repo artifacts keep the
-    // min-of-3 semantics every committed sweep since r9 has used.
+    // the wall (tools/sweep.sh) so committed artifacts are min-of-3.
     // SPARK_GRAFT_BENCH_RUNS=1 IS honored (ADVICE r15 #4): a dev loop
     // may want a single cold pass; runs_completed=1 in the artifact
     // discloses the weaker semantics, and the per-pass checkpoint

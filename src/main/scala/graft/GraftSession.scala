@@ -55,7 +55,10 @@ object GraftSession {
     }
   }
 
-  def local(cpus: Int = 4): SparkSession = {
+  /** Local-mode product session. `cpus` defaults to SPARK_GRAFT_CPUS,
+    * else 4; it sets both the core count and the shuffle width. */
+  def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4))
+      : SparkSession = {
     val s = builder(master = Some(s"local[$cpus]"), shufflePartitions = cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

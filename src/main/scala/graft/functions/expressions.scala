@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expressions for the vector/hash hot paths. These
   * replace higher-order-function pipelines (zip_with + aggregate) with
@@ -18,10 +17,8 @@ import org.apache.spark.sql.SparkSession
   */
 
 /** cosine(a, b) over array<float> — fused dot + norms + divide.
-  * NULL on length mismatch: identical to what the HOF formulation
-  * (zip_with null-pads → null dot) yields, so CosineFusionRule's
-  * rewrite is semantics-preserving for every input, not just
-  * equal-length arrays (ADVICE r1). */
+  * NULL on length mismatch, as the HOF reference `VectorOps.cosine`
+  * (zip_with null-pads → null dot). */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
@@ -454,8 +451,7 @@ case class PqRecon(child: Expression, cids: IndexedSeq[Long],
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Registration: via extensions (GraftExtensions) or imperatively on a
-  * live session (registry is idempotent — re-register overwrites). */
+/** The native functions, registered once per session by GraftExtensions. */
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
 
@@ -522,24 +518,18 @@ object GraftFunctions {
       PqRecon(args(0), litLongs(args(2), "graft_pq_recon"),
         litFloatMatrix(args(1), "graft_pq_recon"),
         litInt(args(3), "graft_pq_recon"))))
-
-  def register(spark: SparkSession): Unit = all.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(getClass.getName, name),
-      builder)
-  }
 }
 
-/** SparkSessionExtensions entry point:
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
+/** SparkSessionExtensions entry point and the only wiring path for the
+  * native functions and the GroupedTopK strategy:
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`,
+  * which graft.GraftSession sets. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
     }
-    ext.injectOptimizerRule(_ => CosineFusionRule)
     ext.injectPlannerStrategy(_ => graft.plans.GroupedTopKStrategy)
   }
 }

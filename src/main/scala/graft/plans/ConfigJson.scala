@@ -456,12 +456,7 @@ object ConfigJson {
     // quote/backslash/control char would otherwise emit invalid JSON
     // and break the serialize → parse → plan round-trip this gate
     // depends on
-    def jstr(v: String): String = "\"" + v.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def jstr(v: String): String = "\"" + graft.Json.escape(v) + "\""
     def arr(vs: Seq[String]) = vs.map(jstr).mkString("[", ",", "]")
     // reject non-finite bars loudly (ADVICE r14 #3): JSON has no
     // NaN/Infinity literal, so serializing one emits invalid JSON and

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, UnsafeProjection}
@@ -14,8 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Grouped top-k as a WHOLE-OPERATOR Catalyst extension — the custom
   * `LogicalPlan` + `Strategy` + `SparkPlan` tier of operator
-  * extension (the other tiers — native `Expression`s and an optimizer
-  * `Rule` — are demonstrated by graft.functions). The physical shape
+  * extension (the expression tier is graft.functions). The physical shape
   * mirrors what a hand-written aggregation would plan:
   *
   *   GroupedTopKFinalExec            (k rows per group, ranked)
@@ -77,13 +76,8 @@ object GroupedTopK {
       s"GroupedTopK needs (long|string, long, double), got " +
         s"(${g.dataType}, ${i.dataType}, ${sc.dataType})")
     val rank = AttributeReference("rank", LongType, nullable = false)()
-    // mirror GraftFunctions.register: usable on sessions built without
-    // the GraftExtensions conf (idempotent — public extraStrategies API)
-    val ss = df.sparkSession
-    if (!ss.experimental.extraStrategies.contains(GroupedTopKStrategy))
-      ss.experimental.extraStrategies =
-        ss.experimental.extraStrategies :+ GroupedTopKStrategy
-    org.apache.spark.sql.GraftPlanBridge.ofRows(ss,
+    // planned by GroupedTopKStrategy, which GraftExtensions injects
+    org.apache.spark.sql.GraftPlanBridge.ofRows(df.sparkSession,
       GroupedTopKNode(g, i, sc, k, rank, plan))
   }
 }

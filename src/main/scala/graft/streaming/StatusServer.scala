@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import graft.plans.Pipeline.BatchTasks
+import graft.Json.escape
 
 /** REST status + submission endpoint — the reference's operational
   * HTTP surface (reference server.go:26-108: GET /etly/tasklist,
@@ -25,23 +26,13 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def streamTaskJson(t: TaskRegistry.TaskStatus): String = {
     val state = t.state match {
       case TaskRegistry.Running   => "RUNNING"
       case TaskRegistry.Finished  => "FINISHED"
       case TaskRegistry.Failed(_) => "FAILED"
     }
-    s"""{"name":"${esc(t.name)}","kind":"stream","state":"$state",""" +
+    s"""{"name":"${escape(t.name)}","kind":"stream","state":"$state",""" +
       s""""batches":${t.batches},"rowsProcessed":${t.rowsProcessed},""" +
       s""""lastProgressMs":${t.lastProgressMs}}"""
   }
@@ -52,9 +43,9 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
       case BatchTasks.Finished(rows, errs, att) =>
         ("FINISHED", s""","rowsWritten":$rows,"errorRows":$errs,"attempts":$att""")
       case BatchTasks.Failed(e, att) =>
-        ("FAILED", s""","error":"${esc(e)}","attempts":$att""")
+        ("FAILED", s""","error":"${escape(e)}","attempts":$att""")
     }
-    s"""{"name":"${esc(t.target)}","kind":"batch","state":"$state",""" +
+    s"""{"name":"${escape(t.target)}","kind":"batch","state":"$state",""" +
       s""""startedMs":${t.startedMs},"updatedMs":${t.updatedMs}$extra}"""
   }
 
@@ -92,7 +83,7 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
   /** GET /graft/errors — GetErrors analog. */
   private def errorsJson: String =
     (listener.errors() ++ BatchTasks.errors())
-      .map { case (n, e) => s"""{"name":"${esc(n)}","error":"${esc(e)}"}""" }
+      .map { case (n, e) => s"""{"name":"${escape(n)}","error":"${escape(e)}"}""" }
       .mkString("[", ",", "]")
 
   /** GET /graft/status — Status analog: overall health roll-up. */
@@ -151,7 +142,7 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
         val targets =
           try ConfigJson.parseTransfers(body).map(_._2)
           catch { case e: Exception =>
-            return (400, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+            return (400, s"""{"error":"${escape(String.valueOf(e.getMessage))}"}""")
           }
         if (once) {
           // transferOnce (server.go:100): run one pass NOW, answer with
@@ -159,11 +150,11 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
           try {
             val rows = ConfigJson.run(s, body)
             val tasks = targets.zip(rows).map { case (t, (w, e)) =>
-              s"""{"target":"${esc(t)}","rowsWritten":$w,"errorRows":$e}"""
+              s"""{"target":"${escape(t)}","rowsWritten":$w,"errorRows":$e}"""
             }
             (200, s"""{"status":"ok","tasks":${tasks.mkString("[", ",", "]")}}""")
           } catch { case e: Exception =>
-            (500, s"""{"status":"error","error":"${esc(String.valueOf(e.getMessage))}"}""")
+            (500, s"""{"status":"error","error":"${escape(String.valueOf(e.getMessage))}"}""")
           }
         } else {
           val th = new Thread(() =>
@@ -173,7 +164,7 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
           th.setDaemon(true)
           th.start()
           (202, s"""{"status":"submitted","targets":${
-            targets.map(t => s""""${esc(t)}"""").mkString("[", ",", "]")}}""")
+            targets.map(t => s""""${escape(t)}"""").mkString("[", ",", "]")}}""")
         }
     }
 
@@ -212,13 +203,13 @@ final class StatusServer(listener: TaskRegistry.Listener, port: Int = 0,
           val name = java.net.URLDecoder.decode(p.stripPrefix("/graft/info/"), "UTF-8")
           infoJson(name) match {
             case Some(j) => respond(x, 200, j)
-            case None    => respond(x, 404, s"""{"error":"no task named ${esc(name)}"}""")
+            case None    => respond(x, 404, s"""{"error":"no task named ${escape(name)}"}""")
           }
         case _ => respond(x, 404, """{"error":"not found"}""")
       }
     } catch {
       case e: Throwable =>
-        respond(x, 500, s"""{"error":"${esc(String.valueOf(e.getMessage))}"}""")
+        respond(x, 500, s"""{"error":"${escape(String.valueOf(e.getMessage))}"}""")
     })
   server.setExecutor(null) // serve on the dispatch thread; status traffic is tiny
 

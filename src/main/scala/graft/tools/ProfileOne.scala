@@ -1,10 +1,11 @@
-// Ad-hoc per-job profiler (dev tool, not part of the build): times a
-// single gate like BenchOne but also logs every Spark job's wall time,
-// description, and the driver-side GAP since the previous job ended —
-// the gap series is where streaming machinery (offset/commit logs,
-// micro-batch planning, file-source listing) and staging writes hide.
-//   tools/bench_java.sh is reused via GRAFT_MAIN=graft.tools.ProfileOne
-//   args: <query> [sfDir] [runs]
+// The dev timer for one gate: runs it `runs` times on the product
+// session, releasing caches between runs as Bench does, and prints
+// `[profile_one] <query> min=... all=...`. It also logs every Spark
+// job's wall time, description, and the driver-side GAP since the
+// previous job ended — the gap series is where streaming machinery
+// (offset/commit logs, micro-batch planning, file-source listing) and
+// staging writes hide.
+//   GRAFT_MAIN=graft.tools.ProfileOne tools/bench_java.sh <query> [sfDir] [runs]
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
@@ -14,7 +15,7 @@ object ProfileOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = graft.GraftSession.local(32)
+    val spark = graft.GraftSession.local()
     spark.range(1000).selectExpr("sum(id)").collect()
     val t0 = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
     val lastEnd = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())

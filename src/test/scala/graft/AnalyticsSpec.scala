@@ -10,7 +10,6 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("registerAll exposes every table to spark.sql with graft functions available") {
     Tables.registerAll(spark, sf)
-    graft.functions.GraftFunctions.register(spark)
     val n = spark.sql(
       """SELECT COUNT(*) AS n FROM lineitem l JOIN orders o ON l_orderkey = o_orderkey
         |WHERE o_totalprice > 100000""".stripMargin).collect()(0).getLong(0)

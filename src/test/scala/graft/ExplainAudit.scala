@@ -7,7 +7,7 @@ package graft
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val targets =
       if (args.length > 1) args.drop(1).toSeq

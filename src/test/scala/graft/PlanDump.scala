@@ -24,7 +24,7 @@ object PlanDump {
     val dir = args(1)
     val tag = args(2)
     val names = args.drop(3).toSeq
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local()
     // GRAFT_PD_CONF="k=v;k=v" pins SQL confs for the dump — e.g.
     // spark.sql.autoBroadcastJoinThreshold=-1 to capture the
     // SortMergeJoin shape a small-SF broadcast would hide (ADVICE r16 #1)

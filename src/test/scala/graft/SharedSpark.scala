@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * JVM; re-creating sessions per-suite triples test wall time). */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    // GraftSession wiring → the extensions (functions + optimizer rule)
-    // are active in every suite
+    // GraftSession wiring → the extensions (native functions + the
+    // GroupedTopK strategy) are active in every suite
     val s = GraftSession.builder(appName = "graft-test", master = Some("local[4]"),
         shufflePartitions = 4)
       .config("spark.ui.enabled", "false")
