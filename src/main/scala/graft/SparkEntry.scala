@@ -199,24 +199,24 @@ object SparkEntry {
     "sim_matryoshka_topk" -> (Similarity.matryoshkaTopK _),
     "sim_ivf_topk" -> (Similarity.ivfTopK _),
     "sim_ivf_index_topk" -> (Similarity.ivfTopKIndexed _),
-    "sim_ivf_index_incremental" -> (Similarity.ivfIncTopK _),
+    "sim_ivf_index_incremental" -> (Similarity.incTopK(Similarity.Float) _),
     "sim_ivf_index_drift" -> (Similarity.ivfIncDriftReport _),
-    "sim_ivf_pq_index_incremental" -> (Similarity.ivfPqIncTopK _),
-    "sim_ivf_pq_lifecycle_topk" -> (Similarity.ivfPqLifecycleTopK _),
+    "sim_ivf_pq_index_incremental" -> (Similarity.incTopK(Similarity.Pq) _),
+    "sim_ivf_pq_lifecycle_topk" -> (Similarity.lifecycleTopK(Similarity.Pq) _),
     "sim_ivf_pq_index_drift" -> (Similarity.ivfPqIncDriftReport _),
-    "sim_ivf_index_compact" -> (Similarity.ivfCompactTopK _),
-    "sim_ivf_lifecycle_topk" -> (Similarity.ivfLifecycleTopK _),
-    "sim_ivf_index_imbalance" -> (Similarity.ivfIncImbalanceReport _),
-    "sim_ivf_pq_index_imbalance" -> (Similarity.ivfPqIncImbalanceReport _),
+    "sim_ivf_index_compact" -> (Similarity.compactTopK(Similarity.Float) _),
+    "sim_ivf_lifecycle_topk" -> (Similarity.lifecycleTopK(Similarity.Float) _),
+    "sim_ivf_index_imbalance" -> (Similarity.imbalanceReport(Similarity.Float) _),
+    "sim_ivf_pq_index_imbalance" -> (Similarity.imbalanceReport(Similarity.Pq) _),
     "sim_maintenance_plan" -> (Similarity.maintenancePlan _),
     "sim_maintenance_apply" -> (Similarity.maintenanceApply _),
-    "sim_maintenance_nightly" -> (Similarity.ivfTwoNightTopK _),
-    "sim_pq_maintenance_nightly" -> (Similarity.ivfPqTwoNightTopK _),
+    "sim_maintenance_nightly" -> (Similarity.twoNightTopK(Similarity.Float) _),
+    "sim_pq_maintenance_nightly" -> (Similarity.twoNightTopK(Similarity.Pq) _),
     "text_bm25_maintenance_nightly" -> (TextAnalysis.bm25TwoNightTopK _),
     "sim_ivf_lifecycle_retrain" -> (Similarity.ivfRetrainTopK _),
     "sim_ivf_pq_lifecycle_retrain" -> (Similarity.ivfPqRetrainTopK _),
-    "sim_ivf_pq_index_compact" -> (Similarity.ivfPqCompactTopK _),
-    "stream_index_append" -> (graft.streaming.Streams.streamIndexAppend _),
+    "sim_ivf_pq_index_compact" -> (Similarity.compactTopK(Similarity.Pq) _),
+    "stream_index_append" -> (graft.streaming.Streams.streamIndexAppend(Similarity.Float) _),
     "text_bm25_topk" -> (TextAnalysis.bm25TopK _),
     "text_bm25_index_topk" -> (TextAnalysis.bm25IndexTopK _),
     "text_bm25_index_incremental" -> (TextAnalysis.bm25IndexIncTopK _),
@@ -290,7 +290,7 @@ object SparkEntry {
     "text_chunk" -> (TextAnalysis.chunk _),
     "text_split" -> (TextAnalysis.trainValSplit _),
     "text_stratified_split" -> (TextAnalysis.stratifiedSplit _),
-    "stream_pq_index_append" -> (graft.streaming.Streams.streamPqIndexAppend _),
+    "stream_pq_index_append" -> (graft.streaming.Streams.streamIndexAppend(Similarity.Pq) _),
     "text_split_leakage_free" -> (TextAnalysis.leakageFreeSplit _),
     "text_split_leakage_lineage" -> (TextAnalysis.leakageFreeSplitLineage _),
     "text_pack" -> (TextAnalysis.pack _),
@@ -1602,7 +1602,7 @@ object SparkEntry {
 
   /** The small-files consults' oracle side: the FS file count itself
     * cannot be recomputed from the tables, but the layout CONTRACT can
-    * — a full write leaves exactly one file per list (writeIvfIndex /
+    * — a full write leaves exactly one file per list (Similarity.writeIndex /
     * buildBm25Index repartition on the list key) and each append only
     * adds files, so for a maintained main `fired ⟺ tonight's batch is
     * non-empty`, and for a freshly compacted or fully rewritten

@@ -408,130 +408,235 @@ object Similarity {
     topKPerQuery(scored)
   }
 
-  /** Build the PERSISTED IVF index — the FAISS index-file shape, done
-    * Spark-native: the bounded centroid table goes to one parquet file
-    * and the corpus goes to parquet PARTITIONED BY its inverted-list id
-    * (`partitionBy(cent_id)` — the inverted lists ARE the filesystem
-    * partitions, ≤ [[IvfMaxNlist]] directories at any corpus size).
-    * Serving then needs zero training jobs even in a fresh process,
-    * and a probe only READS the probed lists: the broadcast probe join
-    * triggers dynamic partition pruning on the postings scan
-    * (spec-asserted), so serving I/O is |probed lists| / nlist of the
-    * corpus — the on-disk analog of an in-memory inverted index. */
-  def buildIvfIndexLineage(s: SparkSession, dir: String,
-      base: String): String = {
-    writeIvfIndex(s, base, kmeansCentroidSeq(s, dir), corpus(s, dir))
-    base
+  // -------------------------------------------------------------------
+  // Maintained vector indexes. The float IVF index and the IVF-PQ index
+  // share one on-disk layout and one build / append / compact /
+  // lifecycle implementation; they differ only in their postings codec
+  // ([[IndexCodec]]). Layout under an index base:
+  //   centroids/           the coarse quantizer (≤ IvfMaxNlist rows)
+  //   codebook/            the PQ codebook (Pq only, ≤ PqCodewords rows)
+  //   postings/cent_id=*/  the inverted lists: one file per list after a
+  //                        full write; appends and publishes add files
+  //   list_counts/         per-list sizes (staged immutable indexes)
+  // The inverted lists ARE the filesystem partitions, so serving needs
+  // zero training jobs even in a fresh process, and the broadcast probe
+  // join triggers dynamic partition pruning on the postings scan
+  // (spec-asserted): serving reads |probed lists| / nlist of the index.
+  // -------------------------------------------------------------------
+
+  /** The bounded header of a vector index: the coarse centroids and the
+    * PQ codebook (empty under the float codec). */
+  private[graft] final case class IndexHeader(cents: Seq[(Long, Seq[Float])],
+      book: Seq[(Long, Seq[Float])])
+
+  /** The postings codec of a maintained vector index: everything the
+    * float IVF index and the IVF-PQ index do differently. Shared code
+    * takes a codec and never asks which one it holds. `tag` prefixes
+    * the staged-artifact tags (`ivf` → `ivfidx`, `ivfsnap`, …);
+    * `postingsSchema` is the explicit postings read schema, which pins
+    * the partition column back to BIGINT (inference yields INT). */
+  private[graft] sealed abstract class IndexCodec(val tag: String,
+      val postingsSchema: String) {
+    /** Header trained on the corpus rows matching `pred` (all rows when
+      * absent), memoized per corpus version. */
+    def train(s: SparkSession, dir: String, pred: Option[String]): IndexHeader
+    /** Header trained on an arbitrary (vec_id, embedding) frame — the
+      * retrain branches' combined corpus. */
+    def trainFrom(s: SparkSession, vecs: DataFrame): IndexHeader
+    def writeHeader(s: SparkSession, base: String, h: IndexHeader): Unit
+    def readHeader(s: SparkSession, base: String): IndexHeader
+    /** (cand_id, c_emb) vectors → postings rows keyed by `cent_id`. */
+    def encode(h: IndexHeader, vecs: DataFrame): DataFrame
+    /** Top-k of a (query_id, q_emb) batch over `postings` under `h`. */
+    def serve(s: SparkSession, dir: String, h: IndexHeader,
+        postings: DataFrame, qdf: DataFrame): DataFrame
+    /** The lifecycle gate's drift consult after tonight's appends:
+      * true → the index must retrain, not serve frozen. */
+    def lifecycleDrifted(s: SparkSession, dir: String, base: String): Boolean
+    /** The two-night loop's drift consult after the night matching
+      * `nightPred` appended. */
+    def nightDrifted(s: SparkSession, dir: String, base: String,
+        nightPred: String): Boolean
   }
 
-  /** ONE writer for the on-disk IVF index layout (centroid file +
-    * partitionBy(cent_id) postings of `vecs` = (cand_id, c_emb)) —
-    * shared by the one-shot build, the incremental snapshot, and the
-    * retrain branch, so the layout cannot drift between them (every
-    * serving path reads what this wrote). Static overwrite on purpose:
-    * list membership changes under a new quantizer, so a dynamic
-    * per-partition overwrite would orphan stale lists. The postings
-    * repartition on the LIST key before writing, so a full write
-    * leaves exactly ONE file per inverted list — without it each of
-    * the assignment's shuffle tasks drops a file into every list it
-    * holds rows for (≈ tasks × lists small files from day one, before
-    * a single append). That layout contract is what the planner's
-    * small-files consult reads: >1 file in a list ⟺ appends landed
-    * since the last full write/compaction. At 100 TB one file per
-    * list is still right (lists are ~n/√n rows); if single lists ever
-    * outgrow a comfortable object size, spark.sql.files
-    * .maxRecordsPerFile splits them without changing the consult
-    * (the threshold becomes files-per-list > ceil(rows/maxRecords)). */
-  private def writeIvfIndex(s: SparkSession, base: String,
-      cents: Seq[(Long, Seq[Float])], vecs: DataFrame): Unit = {
-    import s.implicits._
-    cents.map { case (cid, emb) => (cid, emb.toArray) }
-      .toDF("cent_id", "cent_emb")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/centroids")
-    assignNearestNarrow(vecs, cents, "cand_id", "c_emb")
-      // EXPLICIT width (r17, guide §2.6/§6.2): repartition(col) is
-      // AQE-coalescible, and a coalesced-to-one write opens all ≤nlist
-      // parquet writers serially in one task — the dominant wall of
-      // every index staging. A user-fixed width is exempt; each list
-      // still lands whole in one task, so the one-file-per-list layout
-      // contract is unchanged.
-      .repartition(math.max(1, cents.size), col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$base/postings")
+  /** Float postings (cand_id, c_emb, cent_id): the vectors themselves,
+    * scored by exact cosine inside the probed lists. */
+  private[graft] object Float extends IndexCodec("ivf",
+      "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT") {
+    def train(s: SparkSession, dir: String, pred: Option[String]): IndexHeader =
+      IndexHeader(pred.fold(kmeansCentroidSeq(s, dir))(
+        kmeansCentroidSeqFiltered(s, dir, _)), Nil)
+    def trainFrom(s: SparkSession, vecs: DataFrame): IndexHeader =
+      IndexHeader(kmeansCentroidBuildFrom(s, vecs), Nil)
+    def writeHeader(s: SparkSession, base: String, h: IndexHeader): Unit =
+      writeHeaderFile(s, s"$base/centroids", h.cents, "cent_id", "cent_emb")
+    def readHeader(s: SparkSession, base: String): IndexHeader =
+      IndexHeader(readHeaderFile(s, s"$base/centroids"), Nil)
+    def encode(h: IndexHeader, vecs: DataFrame): DataFrame =
+      assignNearestNarrow(vecs, h.cents, "cand_id", "c_emb")
+    def serve(s: SparkSession, dir: String, h: IndexHeader,
+        postings: DataFrame, qdf: DataFrame): DataFrame =
+      topKPerQuery(broadcast(probeTopCentroids(qdf, h.cents))
+        .join(postings, Seq("cent_id"))
+        .select(col("query_id"), col("cand_id"),
+          expr("graft_cosine(q_emb, c_emb)").as("cosine")))
+    def lifecycleDrifted(s: SparkSession, dir: String, base: String): Boolean =
+      firedOf(ivfIncDriftReportFrom(s, dir, base))
+    /** Consults snapshot ∪ tonight: the snapshot side is the
+      * quantizer's own training set (earlier nights' arrivals stay out —
+      * re-baselining on appended batches would let slow drift ratchet
+      * past the bar one night at a time). */
+    def nightDrifted(s: SparkSession, dir: String, base: String,
+        nightPred: String): Boolean =
+      firedOf(ivfIncDriftReportFrom(s, dir, base, Some(
+        Tables.embeddingsParallel(s, dir)
+          .filter(!expr(IvfIncBatchPred) || expr(nightPred))
+          .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))))
   }
 
-  def stagedIvfIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfidx", dir, vkey) { base =>
-      buildIvfIndexLineage(s, dir, base)
+  /** PQ postings (cand_id, codes, cent_id): each vector's codes under
+    * the frozen codebook. The coarse stage scans M·log2(K) bits per
+    * vector instead of the floats and scores the codes' reconstruction;
+    * the best [[RerankCoarse]] per query refine exactly. */
+  private[graft] object Pq extends IndexCodec("ivfpq",
+      "cand_id BIGINT, codes ARRAY<BIGINT>, cent_id BIGINT") {
+    def train(s: SparkSession, dir: String, pred: Option[String]): IndexHeader =
+      IndexHeader(Float.train(s, dir, pred).cents,
+        pred.fold(pqCodebook(s, dir))(pqCodebookFiltered(s, dir, _)))
+    def trainFrom(s: SparkSession, vecs: DataFrame): IndexHeader =
+      IndexHeader(kmeansCentroidBuildFrom(s, vecs), pqCodebookBuildFrom(s, vecs))
+    def writeHeader(s: SparkSession, base: String, h: IndexHeader): Unit = {
+      require(h.book.nonEmpty, "empty PQ codebook")
+      Float.writeHeader(s, base, h)
+      writeHeaderFile(s, s"$base/codebook", h.book, "code_id", "codeword")
     }
+    def readHeader(s: SparkSession, base: String): IndexHeader =
+      IndexHeader(readHeaderFile(s, s"$base/centroids"),
+        readHeaderFile(s, s"$base/codebook"))
+    def encode(h: IndexHeader, vecs: DataFrame): DataFrame =
+      Float.encode(h, vecs).select(col("cand_id"),
+        pqCodesCol(h.book, "c_emb").as("codes"), col("cent_id"))
+    def serve(s: SparkSession, dir: String, h: IndexHeader,
+        postings: DataFrame, qdf: DataFrame): DataFrame =
+      pqServe(h, postings, qdf, corpus(s, dir))
+    /** Both quantizers must read in-distribution: the coarse one and
+      * the codebook. */
+    def lifecycleDrifted(s: SparkSession, dir: String, base: String): Boolean =
+      Float.lifecycleDrifted(s, dir, base) ||
+        firedOf(ivfPqIncDriftReportFrom(s, dir, base))
+    /** Consults tonight's arrivals only, against the codebook's own
+      * training snapshot (the same ratchet argument as the float
+      * night). */
+    def nightDrifted(s: SparkSession, dir: String, base: String,
+        nightPred: String): Boolean =
+      firedOf(ivfPqIncDriftReportFrom(s, dir, base,
+        Some(corpus(s, dir).filter(expr(nightPred)))))
   }
 
-  /** IVF retrieval served from the PERSISTED index: centroids read
-    * back from parquet (bounded ≤ nlist rows — floats round-trip
-    * parquet bit-exactly, so probing is identical to the in-memory
-    * path), postings read with an explicit schema (pinning the
-    * partition column back to BIGINT), and the probe join prunes
-    * unprobed list partitions at runtime. Bit-equal to [[ivfTopK]] —
-    * same oracle. */
+  /** A bounded header file (centroids or codebook) as id-sorted rows,
+    * memoized driver-side with file-signature revalidation
+    * ([[graft.sources.ArtifactHeaders]]): serving and every streamed
+    * micro-batch append re-read the same immutable file, and each
+    * uncached collect is 1-2 scheduler round trips of pure fixed cost.
+    * Floats round-trip parquet bit-exactly, so a header read back
+    * assigns and encodes exactly as at build time. */
+  private def readHeaderFile(s: SparkSession, path: String): Seq[(Long, Seq[Float])] =
+    graft.sources.ArtifactHeaders.cached(s, path) {
+      s.read.parquet(path)
+        .collect() // bounded: ≤ IvfMaxNlist or ≤ PqCodewords rows
+        .map(r => (r.getLong(0), r.getSeq[Float](1)))
+        .sortBy(_._1).toSeq
+    }
+
+  private def writeHeaderFile(s: SparkSession, path: String,
+      rows: Seq[(Long, Seq[Float])], idCol: String, vecCol: String): Unit = {
+    import s.implicits._
+    rows.map { case (id, v) => (id, v.toArray) }.toDF(idCol, vecCol)
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  private def postingsOf(c: IndexCodec, s: SparkSession, base: String): DataFrame =
+    s.read.schema(c.postingsSchema).parquet(s"$base/postings")
+
+  /** Encode `vecs` under `h` into inverted lists at `path`, repartitioned
+    * on the list key at an EXPLICIT width: repartition(col) is
+    * AQE-coalescible, and a write coalesced to one task (or a streamed
+    * micro-batch, which arrives as one source partition) opens every
+    * touched list's parquet writer serially. Each list still lands
+    * whole in one task: one file per list per write. */
+  private def writeLists(c: IndexCodec, h: IndexHeader, vecs: DataFrame,
+      path: String): Unit =
+    c.encode(h, vecs).repartition(math.max(1, h.cents.size), col("cent_id"))
+      .write.mode("overwrite").partitionBy("cent_id").parquet(path)
+
+  /** ONE writer for the index layout — the one-shot build, the
+    * incremental snapshot and the retrain branches all write through
+    * it, so the layout every serving path reads cannot drift between
+    * them. Static overwrite on purpose: list membership changes under a
+    * new quantizer, so a dynamic per-partition overwrite would orphan
+    * stale lists. A full write leaves exactly ONE file per list, and
+    * that is what the planner's small-files consult reads: >1 file in a
+    * list ⟺ appends landed since the last full write or compaction. If
+    * single lists ever outgrow a comfortable object size,
+    * spark.sql.files.maxRecordsPerFile splits them without changing the
+    * consult (the threshold becomes files-per-list >
+    * ceil(rows/maxRecords)). */
+  private def writeIndex(c: IndexCodec)(s: SparkSession, base: String,
+      h: IndexHeader, vecs: DataFrame): Unit = {
+    c.writeHeader(s, base, h)
+    writeLists(c, h, vecs, s"$base/postings")
+  }
+
+  /** Stage the index artifact `<codec tag><kind>` once per embeddings
+    * version. */
+  private def staged(c: IndexCodec, kind: String, s: SparkSession,
+      dir: String)(build: String => Unit): String =
+    Tables.stagedArtifact(c.tag + kind, dir,
+        Tables.versionedKey(s, dir, "embeddings")) { base => build(base); base }
+
+  /** The one-shot index over the whole corpus. */
+  private def stagedIndex(c: IndexCodec)(s: SparkSession, dir: String): String =
+    staged(c, "idx", s, dir) { base =>
+      writeIndex(c)(s, base, c.train(s, dir, None), corpus(s, dir))
+    }
+
+  def stagedIvfIndex(s: SparkSession, dir: String): String =
+    stagedIndex(Float)(s, dir)
+
+  def stagedIvfPqIndex(s: SparkSession, dir: String): String =
+    stagedIndex(Pq)(s, dir)
+
+  /** Serve the gate query slice from the index at `base`, with the
+    * lists of the per-call `deltas` unioned in (the streaming-append
+    * topology: immutable snapshot lists ∪ tonight's delta lists,
+    * header from the snapshot). Union changes which FILES rows come
+    * from, never the rows. */
+  private[graft] def serveFrom(c: IndexCodec)(s: SparkSession, dir: String,
+      base: String, deltas: String*): DataFrame =
+    c.serve(s, dir, c.readHeader(s, base),
+      (base +: deltas).map(postingsOf(c, s, _)).reduce(_ unionByName _),
+      queries(s, dir))
+
+  /** IVF retrieval served from the persisted one-shot index. Bit-equal
+    * to [[ivfTopK]] — same oracle. */
   def ivfTopKIndexed(s: SparkSession, dir: String): DataFrame =
-    ivfIndexedServe(s, dir, queries(s, dir))
+    serveFrom(Float)(s, dir, stagedIvfIndex(s, dir))
 
   /** Serve an arbitrary (query_id, q_emb) batch from the persisted
     * index — the entry point the streaming gate reuses per
     * micro-batch. */
   private[graft] def ivfIndexedServe(s: SparkSession, dir: String,
-      qdf: DataFrame): DataFrame =
-    ivfServeFrom(s, stagedIvfIndex(s, dir), qdf)
-
-  /** Serve a query batch from ANY persisted IVF index layout
-    * (centroids file + partitionBy(cent_id) postings under `base`) —
-    * shared by the one-shot index and the incrementally-maintained
-    * one. */
-  private def ivfServeFrom(s: SparkSession, base: String,
       qdf: DataFrame): DataFrame = {
-    val cents = readCentroids(s, s"$base/centroids")
-    val postings = s.read
-      .schema("cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-      .parquet(s"$base/postings")
-    val probes = probeTopCentroids(qdf, cents)
-    val scored = broadcast(probes).join(postings, Seq("cent_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_cosine(q_emb, c_emb)").as("cosine"))
-    topKPerQuery(scored)
+    val base = stagedIvfIndex(s, dir)
+    Float.serve(s, dir, Float.readHeader(s, base), postingsOf(Float, s, base), qdf)
   }
 
-  /** Artifact-header read, memoized driver-side with file-signature
-    * revalidation (r17; see [[graft.sources.ArtifactHeaders]]): the
-    * serving and nightly-append paths re-collect the same immutable
-    * ≤nlist-row centroid file once per call — per-micro-batch in the
-    * streaming appends — and each collect is 1-2 scheduler round trips
-    * of pure fixed cost. */
-  private def readCentroids(s: SparkSession, path: String): Seq[(Long, Seq[Float])] =
-    graft.sources.ArtifactHeaders.cached(s, path) {
-      s.read.parquet(path)
-        .collect() // bounded: ≤ IvfMaxNlist rows
-        .map(r => (r.getLong(0), r.getSeq[Float](1)))
-        .sortBy(_._1).toSeq
-    }
-
-  /** The PQ codebook header (≤ PqCodebookK rows), same memo discipline
-    * as [[readCentroids]]. */
-  private def readCodebook(s: SparkSession, path: String): Seq[(Long, Seq[Float])] =
-    graft.sources.ArtifactHeaders.cached(s, path) {
-      s.read.parquet(path)
-        .collect() // bounded: ≤ codebook K rows
-        .map(r => (r.getLong(0), r.getSeq[Float](1)))
-        .sortBy(_._1).toSeq
-    }
-
   // -------------------------------------------------------------------
-  // Incremental maintenance of the PERSISTED IVF index (VERDICT r8 #6)
-  // — the nightly-crawl story closed for the serving index: a new
-  // embedding batch APPENDS into the existing inverted-list partitions
-  // (assignment against the frozen quantizer is one narrow pass; the
-  // snapshot postings files are never rewritten), and a drift signal
-  // decides when appending must give way to a retrain.
+  // Incremental maintenance: a new embedding batch APPENDS into the
+  // existing inverted lists under the frozen header (assignment and
+  // encoding are one narrow pass; snapshot postings files are never
+  // rewritten), and drift signals decide when appending must give way
+  // to a retrain.
   // -------------------------------------------------------------------
 
   /** Nightly-batch split for the incremental-index gate: tonight's
@@ -553,54 +658,15 @@ object Similarity {
       Tables.versionedKey(s, dir, "embeddings"))(
       kmeansCentroidBuild(s, dir, Some(pred)))
 
-  /** Build the snapshot index (quantizer trained WITHOUT tonight's
-    * batch; postings = snapshot corpus) then APPEND the batch: one
-    * narrow assignment of batch vectors against the FROZEN centroids
-    * read back from the index artifact — the FAISS `add` contract
-    * (adding vectors never retrains the coarse quantizer) done
-    * Spark-native as a partitionBy append into the existing inverted-
-    * list directories. Per-night cost scales with the batch: snapshot
-    * postings are untouched files, the centroid read is ≤ nlist rows,
-    * the append writes |batch| rows. */
-  def buildIvfIncIndex(s: SparkSession, dir: String, base: String): String = {
-    buildIvfIncSnapshot(s, dir, base)
-    appendIvfIncBatch(s, dir, base)
-    base
-  }
-
-  /** The snapshot half: quantizer + snapshot postings (last night's
-    * state). */
-  def buildIvfIncSnapshot(s: SparkSession, dir: String, base: String): String = {
-    writeIvfIndex(s, base,
-      kmeansCentroidSeqFiltered(s, dir, s"NOT ($IvfIncBatchPred)"),
-      corpus(s, dir).filter(!expr(IvfIncBatchPred)))
-    base
-  }
-
-  /** The nightly append: frozen centroids come from the ARTIFACT (the
-    * append job owns no training state; floats round-trip parquet
-    * bit-exactly, so the assignment is identical to build-time), and
-    * the write APPENDS new files into the inverted-list directories —
-    * snapshot postings files are never rewritten (spec-asserted). */
-  def appendIvfIncBatch(s: SparkSession, dir: String, base: String): Unit =
-    appendIvfIncVectors(s, base,
-      corpus(s, dir).filter(expr(IvfIncBatchPred)))
-
-  /** The assigned-postings frame for a vector batch against the
-    * frozen artifact centroids. */
-  private def ivfIncAssigned(s: SparkSession, base: String,
-      vecs: DataFrame): DataFrame = {
-    assignNearestNarrow(vecs, readCentroids(s, s"$base/centroids"),
-      "cand_id", "c_emb")
-  }
-
-  /** Append ANY (cand_id, c_emb) vector frame into the index at
-    * `base` — the batch (one-shot) append path. */
-  private[graft] def appendIvfIncVectors(s: SparkSession, base: String,
-      vecs: DataFrame): Unit =
-    ivfIncAssigned(s, base, vecs)
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$base/postings")
+  /** Append ANY (cand_id, c_emb) vector frame into the index at `base`
+    * under its frozen header — the FAISS `add` contract (adding vectors
+    * never retrains): the header comes back from the ARTIFACT, so the
+    * append job owns no training state, and the write only ADDS files
+    * to the inverted lists (spec-asserted). */
+  private[graft] def appendVectors(c: IndexCodec)(s: SparkSession,
+      base: String, vecs: DataFrame): Unit =
+    c.encode(c.readHeader(s, base), vecs)
+      .write.mode("append").partitionBy("cent_id").parquet(s"$base/postings")
 
   /** IDEMPOTENT micro-batch publish — what makes the streaming
     * maintenance gates' "exactly-once" claim true rather than
@@ -638,93 +704,83 @@ object Similarity {
     fs.delete(stage, true)
   }
 
-  /** Streaming entry: idempotent IVF append for micro-batch `bid`.
-    * `artifactBase` locates the frozen centroids (defaults to the
-    * append target — the delta topology reads them from the shared
-    * snapshot while appending into its own per-call dir). */
-  private[graft] def appendIvfIncVectorsIdempotent(s: SparkSession,
-      base: String, vecs: DataFrame, bid: Long,
-      artifactBase: String = null): Unit = {
-    val art = Option(artifactBase).getOrElse(base)
-    // parallelize the ≤nlist-file staged write (r17, guide §2.6/§6.2):
-    // the micro-batch arrives as ONE source partition, so the dynamic
-    // partitionBy write was a single task serially opening/closing one
-    // parquet writer per touched inverted list (~nlist writer cycles ≈
-    // the whole micro-batch wall). An EXPLICIT-width repartition (AQE
-    // never coalesces a user-fixed width, unlike repartition(col))
-    // spreads the lists across tasks; one file per touched list per
-    // bid either way — the publish/rename layout contract unchanged.
-    val nlist = math.max(1, readCentroids(s, s"$art/centroids").size)
-    publishStagedAppend(s, base, bid) { stage =>
-      ivfIncAssigned(s, art, vecs)
-        .repartition(nlist, col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(stage)
+  /** Idempotent append of micro-batch `bid` into `base`, encoded under
+    * the header at `art` (the streaming gate reads it from the shared
+    * snapshot while appending into its own per-call delta). */
+  private[graft] def appendIdempotent(c: IndexCodec)(s: SparkSession,
+      base: String, vecs: DataFrame, bid: Long, art: String): Unit = {
+    val h = c.readHeader(s, art)
+    publishStagedAppend(s, base, bid)(writeLists(c, h, vecs, _))
+  }
+
+  /** Tonight's batch as a two-micro-batch append STREAM into `base`
+    * under the header at `art` — the topology the streaming gate drains
+    * and the lifecycle gate composes. Encoding is stateless and appends
+    * are additive, so micro-batch boundaries cannot change the final
+    * postings set. Float arrays survive the ndjson hop bit-exactly
+    * (shortest-roundtrip rendering). */
+  private[graft] def appendTonightStream(c: IndexCodec)(s: SparkSession,
+      dir: String, base: String, art: String): Unit =
+    graft.streaming.Streams.runAppendStream(s, base,
+      Tables.embeddings(s, dir).filter(expr(IvfIncBatchPred))
+        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")),
+      "cand_id LONG, c_emb ARRAY<FLOAT>")(appendIdempotent(c)(s, base, _, _, art))
+
+  /** The snapshot half — last night's state: header trained WITHOUT
+    * tonight's batch, postings = the snapshot corpus. */
+  private[graft] def buildIncSnapshot(c: IndexCodec)(s: SparkSession,
+      dir: String, base: String): Unit =
+    writeIndex(c)(s, base, c.train(s, dir, Some(s"NOT ($IvfIncBatchPred)")),
+      corpus(s, dir).filter(!expr(IvfIncBatchPred)))
+
+  /** The nightly append of tonight's batch under the frozen header. */
+  private[graft] def appendIncBatch(c: IndexCodec)(s: SparkSession,
+      dir: String, base: String): Unit =
+    appendVectors(c)(s, base, corpus(s, dir).filter(expr(IvfIncBatchPred)))
+
+  /** Snapshot build, then tonight's append. Per-night cost scales with
+    * the batch: snapshot postings are untouched files, the header read
+    * is bounded, the append writes |batch| rows. */
+  private[graft] def buildIncIndex(c: IndexCodec)(s: SparkSession,
+      dir: String, base: String): Unit = {
+    buildIncSnapshot(c)(s, dir, base)
+    appendIncBatch(c)(s, dir, base)
+  }
+
+  /** The IMMUTABLE snapshot half, staged once per corpus version: the
+    * streaming gates append into per-call deltas beside it and serve
+    * the union, so a bench rep pays the marginal append, not the
+    * snapshot build. This IS the production topology: last night's
+    * index is an immutable artifact; tonight's arrivals land beside it
+    * until compaction folds them in. */
+  private[graft] def stagedSnapshot(c: IndexCodec)(s: SparkSession,
+      dir: String): String =
+    staged(c, "snap", s, dir)(buildIncSnapshot(c)(s, dir, _))
+
+  /** Snapshot + tonight's append, with the per-list size header written
+    * LAST, from the final postings state (the artifact is immutable
+    * once staged, so the header cannot go stale). */
+  private[graft] def stagedIncIndex(c: IndexCodec)(s: SparkSession,
+      dir: String): String =
+    staged(c, "inc", s, dir) { base =>
+      buildIncIndex(c)(s, dir, base)
+      writeListCounts(s, base, c.postingsSchema)
     }
-  }
 
-  /** The IMMUTABLE snapshot half of the incremental index, staged once
-    * per corpus version — the per-call streaming gates append into
-    * their own delta dirs and serve the union, so a bench sweep pays
-    * the snapshot build (training + full-corpus assignment + postings
-    * write) once instead of per rep. This IS the production topology:
-    * last night's index is an immutable artifact; tonight's arrivals
-    * land beside it until compaction folds them in. */
-  private[graft] def stagedIvfIncSnapshot(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfsnap", dir, vkey) { base =>
-      buildIvfIncSnapshot(s, dir, base)
-    }
-  }
+  /** Gate: serving from the incrementally-maintained index. Hash-equal
+    * to the one-shot rebuild under the SAME frozen-header contract
+    * (train on everything but the batch, assign and encode everything),
+    * which is exactly what the DuckDB oracle computes — the append path
+    * is proven lossless, not recall-trusted. Retraining instead of
+    * appending is a policy decision driven by the drift reports; the
+    * gate corpus sits under their bars, so frozen serving is the
+    * correct branch (spec-asserted, both branches exercised on
+    * synthetic drift). */
+  private[graft] def incTopK(c: IndexCodec)(s: SparkSession,
+      dir: String): DataFrame =
+    serveFrom(c)(s, dir, stagedIncIndex(c)(s, dir))
 
-  private[graft] def stagedIvfPqIncSnapshot(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpqsnap", dir, vkey) { base =>
-      buildIvfPqIncSnapshot(s, dir, base)
-    }
-  }
-
-  /** Serve the gate query slice from a snapshot + delta postings PAIR
-    * (the streaming-append topology: immutable snapshot lists union
-    * tonight's per-call delta lists; centroids from the snapshot).
-    * Row-identical to serving one merged dir — union changes which
-    * FILES rows come from, never the rows. */
-  private[graft] def ivfServeUnion(s: SparkSession, dir: String,
-      snapBase: String, deltaBase: String): DataFrame = {
-    val cents = readCentroids(s, s"$snapBase/centroids")
-    def posts(b: String) = s.read
-      .schema("cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-      .parquet(s"$b/postings")
-    val postings = posts(snapBase).unionByName(posts(deltaBase))
-    val probes = probeTopCentroids(queries(s, dir), cents)
-    val scored = broadcast(probes).join(postings, Seq("cent_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("graft_cosine(q_emb, c_emb)").as("cosine"))
-    topKPerQuery(scored)
-  }
-
-  def stagedIvfIncIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfinc", dir, vkey) { base =>
-      val b = buildIvfIncIndex(s, dir, base)
-      writeListCounts(s, b) // size header, from the FINAL postings state
-      b
-    }
-  }
-
-  /** Gate: serving from the incrementally-maintained persisted index —
-    * snapshot postings + appended batch lists under the frozen
-    * quantizer. Hash-equal to the one-shot rebuild under the SAME
-    * frozen-quantizer contract (train on everything but the batch,
-    * assign everything), which is exactly what the DuckDB oracle
-    * computes — so the append path is proven lossless, not recall-
-    * trusted. Retraining instead of appending is a policy decision
-    * driven by [[ivfIncRetrainSignal]]; the gate corpus sits under the
-    * drift bar, so frozen serving is the correct branch
-    * (spec-asserted, both branches exercised on synthetic drift). */
-  def ivfIncTopK(s: SparkSession, dir: String): DataFrame =
-    ivfServeFrom(s, stagedIvfIncIndex(s, dir), queries(s, dir))
-
-  /** Compact the inverted lists of a persisted (appended) IVF index IN
+  /** Compact the inverted lists of a persisted (appended) index IN
     * PLACE — the small-files closure of the append contract: each
     * nightly append leaves one file per write task per touched list,
     * and an object store serving thousands of nights of appends pays
@@ -733,17 +789,15 @@ object Similarity {
     * more than `maxFiles` parquet files, reads ONLY those lists, and
     * rewrites each as ONE file via dynamic partition overwrite —
     * untouched lists keep their files byte-identical, rows are
-    * preserved bit-exactly (floats round-trip parquet), so serving is
-    * hash-equal before and after. One shuffle of the fat lists keyed
-    * by list id; thin lists cost zero I/O. Returns the compacted list
-    * ids. */
+    * preserved bit-exactly, so serving is hash-equal before and after.
+    * One shuffle of the fat lists keyed by list id; thin lists cost
+    * zero I/O. `rowSchema` is the explicit read schema (it pins the
+    * partition-column type); `partitionCol` is `bucket` for the BM25
+    * postings — the compactor is the same for any bounded-partition
+    * inverted layout. Returns the compacted list ids. */
   def compactIvfIncIndex(s: SparkSession, base: String,
       maxFiles: Int = 1,
-      // explicit read schema pins the partition-column type (inference
-      // yields INT for numeric dirs); the PQ index passes its codes row
-      rowSchema: String = "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT",
-      // the BM25 postings index passes "bucket" — the compactor is the
-      // same for any bounded-partition inverted layout
+      rowSchema: String = Float.postingsSchema,
       partitionCol: String = "cent_id"): Seq[Long] = {
     val post = new org.apache.hadoop.fs.Path(s"$base/postings")
     val fs = post.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -755,11 +809,9 @@ object Similarity {
     // entry means a prior publish crashed — finish it before anything
     // else (the postings may be half-replaced, the stage is whole).
     val stage = new org.apache.hadoop.fs.Path(s"$base/postings_compact_stage")
-    // explicit repartition width (r17 — see writeIvfIndex): an
-    // AQE-coalesced single task would serialize one parquet writer per
-    // rewritten list; a fixed width keeps each list whole in one task
-    // (one output file per rewritten dir, the layout contract) while
-    // spreading lists across the cluster
+    // explicit repartition width (see writeLists): each list stays
+    // whole in one task — one output file per rewritten dir — while
+    // the lists spread across the cluster
     def publishStage(): Unit =
       graft.GraftSession.withSqlConfs(s,
           "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
@@ -775,10 +827,10 @@ object Similarity {
         publishStage()
       fs.delete(stage, true)
     }
-    // the fat-list selection runs AFTER crash recovery (ADVICE r9 #1):
-    // listing first would select over a half-published postings state —
-    // already-recovered lists get pointlessly rewritten and a list that
-    // only reads fat post-recovery stays uncompacted until next call
+    // the fat-list selection runs AFTER crash recovery: listing first
+    // would select over a half-published postings state — recovered
+    // lists get pointlessly rewritten and a list that only reads fat
+    // post-recovery stays uncompacted until the next call
     val fat = fatLists(s, base, partitionCol, maxFiles)
     if (fat.nonEmpty) {
       s.read.schema(rowSchema).parquet(s"$base/postings")
@@ -793,18 +845,18 @@ object Similarity {
   }
 
   /** The compactor's fat-list selection as a standalone CONSULT — the
-    * planner's small-files trigger (VERDICT r12 #4). A driver-bounded
-    * directory listing (≤ nlist/nbucket entries): lists holding more
-    * than `maxFiles` parquet files, i.e. lists appends have landed in
-    * since the last full write or compaction, because a full write
-    * leaves exactly one file per list (the [[writeIvfIndex]] layout
-    * contract) and each append only adds files. The ORACLE for a
-    * consult built on this cannot list a filesystem; it expresses the
-    * same verdict through that contract — fired ⟺ the nightly batch
-    * is non-empty (for a maintained main) / constant false (for a
-    * freshly compacted or fully rewritten artifact) — so a layout
-    * regression that breaks the contract hash-fails the planner gate
-    * loudly instead of silently changing compaction behavior. */
+    * planner's small-files trigger. A driver-bounded directory listing
+    * (≤ nlist/nbucket entries): lists holding more than `maxFiles`
+    * parquet files, i.e. lists appends have landed in since the last
+    * full write or compaction, because a full write leaves exactly one
+    * file per list (the [[writeIndex]] layout contract) and each append
+    * only adds files. The ORACLE for a consult built on this cannot
+    * list a filesystem; it expresses the same verdict through that
+    * contract — fired ⟺ the nightly batch is non-empty (for a
+    * maintained main) / constant false (for a freshly compacted or
+    * fully rewritten artifact) — so a layout regression that breaks
+    * the contract hash-fails the planner gate loudly instead of
+    * silently changing compaction behavior. */
   private[graft] def fatLists(s: SparkSession, base: String,
       partitionCol: String = "cent_id", maxFiles: Int = 1): Seq[Long] = {
     val post = new org.apache.hadoop.fs.Path(s"$base/postings")
@@ -818,68 +870,65 @@ object Similarity {
       .map(_.getPath.getName.stripPrefix(s"$partitionCol=").toLong).toSeq.sorted
   }
 
-  /** Gate: serving from the COMPACTED incrementally-maintained index —
-    * a dedicated staged copy of the inc index (build + append) runs
-    * the compactor, then serves. Same oracle as the uncompacted gate:
-    * compaction moves rows between files, never changes them. */
-  def stagedIvfCompactIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfcmp", dir, vkey) { base =>
-      buildIvfIncIndex(s, dir, base)
-      compactIvfIncIndex(s, base)
-      base
+  /** A dedicated staged copy of the incremental index (build + append)
+    * with its fat lists compacted. */
+  private[graft] def stagedCompactIndex(c: IndexCodec)(s: SparkSession,
+      dir: String): String =
+    staged(c, "cmp", s, dir) { base =>
+      buildIncIndex(c)(s, dir, base)
+      compactIvfIncIndex(s, base, rowSchema = c.postingsSchema)
     }
-  }
 
-  def ivfCompactTopK(s: SparkSession, dir: String): DataFrame =
-    ivfServeFrom(s, stagedIvfCompactIndex(s, dir), queries(s, dir))
+  /** Gate: serving from the COMPACTED incremental index — the
+    * [[incTopK]] oracle verbatim: compaction moves rows between files,
+    * never changes them (codes are integers and floats round-trip
+    * parquet, so rows survive the rewrite bit-exactly). */
+  private[graft] def compactTopK(c: IndexCodec)(s: SparkSession,
+      dir: String): DataFrame =
+    serveFrom(c)(s, dir, stagedCompactIndex(c)(s, dir))
 
-  /** COMPOSITE nightly-maintenance lifecycle over ONE staged index
-    * (VERDICT r9 #3) — the pieces exist as separate gates; this gate
-    * proves they COMPOSE: (1) the snapshot index builds once (the only
-    * training pass — [[trainingBuilds]]-spec-counted); (2) tonight's
-    * batch arrives as a real two-micro-batch STREAM, each appending
-    * idempotently under the frozen artifact centroids; (3) the DRIFT
-    * report consults the artifact and takes the append branch (the
-    * gate corpus is in-distribution — a loud require, since serving a
-    * drifted index silently would defeat the policy); (4) the
-    * small-files COMPACTION collapses the append-fattened lists
-    * (stage-then-publish crash-safe); (5) serving reads the final
-    * artifact. Hash-equal to the one-shot frozen-quantizer rebuild —
-    * the same oracle as the plain incremental gate, because appends
-    * move rows in, compaction moves rows between files, and the drift
-    * consult moves nothing. */
-  def stagedIvfLifecycleIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivflife", dir, vkey) { base =>
-      buildIvfIncSnapshot(s, dir, base)
-      graft.streaming.Streams.runIndexAppendStream(s, dir, base)
-      val retrain = ivfIncDriftReportFrom(s, dir, base)
-        .head().getAs[Boolean]("retrain")
-      require(!retrain,
-        "lifecycle gate expects the in-distribution append branch; " +
-          "a drifted corpus must retrain, not serve the frozen index")
-      compactIvfIncIndex(s, base)
-      base
+  /** COMPOSITE nightly-maintenance lifecycle over ONE staged index — the
+    * pieces exist as separate gates; this one proves they COMPOSE:
+    * (1) the snapshot index builds once (the only training pass —
+    * [[trainingBuilds]]-spec-counted); (2) tonight's batch arrives as a
+    * real two-micro-batch STREAM, each appending idempotently under the
+    * frozen artifact header; (3) the codec's drift consult reads the
+    * artifact and takes the append branch (the gate corpus is
+    * in-distribution — a loud require, since serving a drifted index
+    * silently would defeat the policy); (4) the small-files COMPACTION
+    * collapses the append-fattened lists (stage-then-publish
+    * crash-safe); (5) serving reads the final artifact. Hash-equal to
+    * the one-shot frozen-header rebuild — the [[incTopK]] oracle,
+    * because appends move rows in, compaction moves rows between files,
+    * and the drift consult moves nothing. */
+  private[graft] def stagedLifecycleIndex(c: IndexCodec)(s: SparkSession,
+      dir: String): String =
+    staged(c, "life", s, dir) { base =>
+      buildIncSnapshot(c)(s, dir, base)
+      appendTonightStream(c)(s, dir, base, base)
+      require(!c.lifecycleDrifted(s, dir, base),
+        s"${c.tag} lifecycle gate expects the in-distribution append " +
+          "branch; a drifted corpus must retrain, not serve the frozen index")
+      compactIvfIncIndex(s, base, rowSchema = c.postingsSchema)
     }
-  }
 
-  def ivfLifecycleTopK(s: SparkSession, dir: String): DataFrame =
-    ivfServeFrom(s, stagedIvfLifecycleIndex(s, dir), queries(s, dir))
+  private[graft] def lifecycleTopK(c: IndexCodec)(s: SparkSession,
+      dir: String): DataFrame =
+    serveFrom(c)(s, dir, stagedLifecycleIndex(c)(s, dir))
 
   // -------------------------------------------------------------------
-  // Two-night executor loop (VERDICT r13 #5): the reference's scheduler
-  // is a LOOP over time (service.go:131 scheduleNextRun) — the
-  // maintenance executor must converge across consecutive corpus
-  // versions, not just within one night. The gate runs the nightly
-  // decide→execute→verify cycle TWICE over one maintained artifact:
-  //   night N: append tonight's arrivals under the frozen quantizer →
-  //   consult (drift must read the append branch — tonight's arrivals
-  //   only; small_files must FIRE, because the append fattened lists) →
-  //   compact → re-consult (small_files clear) → PROMOTE (persist the
-  //   promotion-point serving proof inside the artifact).
+  // Two-night executor loop: the maintenance executor must converge
+  // across consecutive corpus versions, not just within one night (the
+  // reference's scheduler is a LOOP over time). The gate runs the
+  // nightly decide→execute→verify cycle TWICE over one maintained
+  // artifact:
+  //   night N: append tonight's arrivals under the frozen header →
+  //   consult (drift must read the append branch; small_files must
+  //   FIRE, because the append fattened lists) → compact → re-consult
+  //   (small_files clear) → PROMOTE (persist the promotion-point
+  //   serving proof inside the artifact).
   // Serving at each promotion point is hash-equal to the one-shot
-  // frozen-quantizer build over exactly the vectors that had arrived by
+  // frozen-header build over exactly the vectors that had arrived by
   // that night — proven by the oracle, not trusted.
   // -------------------------------------------------------------------
 
@@ -891,119 +940,39 @@ object Similarity {
   private[graft] val IvfNight2Pred =
     s"($IvfIncBatchPred) AND (vec_id div 10) % 2 = 1"
 
-  /** One night of the executor loop over the artifact at `base`. The
-    * drift consult baselines against the quantizer's own TRAINING
-    * snapshot (earlier nights' arrivals are excluded from the snapshot
-    * side — the in-sample mean is the quality bar the frozen quantizer
-    * was admitted under, and re-baselining on appended batches would
-    * let slow drift ratchet past the bar one night at a time). */
-  private def runMaintenanceNight(s: SparkSession, dir: String,
-      base: String, nightPred: String, label: String): Unit = {
-    appendIvfIncVectors(s, base, corpus(s, dir).filter(expr(nightPred)))
-    val consultCorpus = Tables.embeddingsParallel(s, dir)
-      .filter(!expr(IvfIncBatchPred) || expr(nightPred))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    val retrain = ivfIncDriftReportFrom(s, dir, base, Some(consultCorpus))
-      .head().getAs[Boolean]("retrain")
-    require(!retrain, s"two-night loop: $label expected the " +
-      "in-distribution append branch; a drifted night must retrain")
-    require(fatLists(s, base).nonEmpty, s"two-night loop: $label append " +
-      "left no fat lists — the small_files consult should fire")
-    compactIvfIncIndex(s, base)
-    require(fatLists(s, base).isEmpty, s"two-night loop: $label compact " +
-      "did not clear the small_files consult")
-    ivfServeFrom(s, base, queries(s, dir))
+  /** One night of the executor loop over the artifact at `base`. */
+  private def runMaintenanceNight(c: IndexCodec)(s: SparkSession,
+      dir: String, base: String, nightPred: String, label: String): Unit = {
+    appendVectors(c)(s, base, corpus(s, dir).filter(expr(nightPred)))
+    require(!c.nightDrifted(s, dir, base, nightPred),
+      s"${c.tag} two-night loop: $label expected the in-distribution " +
+        "append branch; a drifted night must retrain")
+    require(fatLists(s, base).nonEmpty, s"${c.tag} two-night loop: $label " +
+      "append left no fat lists — the small_files consult should fire")
+    compactIvfIncIndex(s, base, rowSchema = c.postingsSchema)
+    require(fatLists(s, base).isEmpty, s"${c.tag} two-night loop: $label " +
+      "compact did not clear the small_files consult")
+    serveFrom(c)(s, dir, base)
       .write.mode("overwrite").parquet(s"$base/${label}_topk")
   }
 
   /** The two-night artifact, staged once per corpus version: snapshot
     * build (the only training pass), then the nightly cycle twice. */
-  private[graft] def stagedIvfTwoNightIndex(s: SparkSession,
-      dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivf2night", dir, vkey) { base =>
-      buildIvfIncSnapshot(s, dir, base)
-      runMaintenanceNight(s, dir, base, IvfNight1Pred, "night1")
-      runMaintenanceNight(s, dir, base, IvfNight2Pred, "night2")
-      base
+  private[graft] def stagedTwoNightIndex(c: IndexCodec)(s: SparkSession,
+      dir: String): String =
+    staged(c, "2night", s, dir) { base =>
+      buildIncSnapshot(c)(s, dir, base)
+      runMaintenanceNight(c)(s, dir, base, IvfNight1Pred, "night1")
+      runMaintenanceNight(c)(s, dir, base, IvfNight2Pred, "night2")
     }
-  }
 
   /** Gate: both promotion points' serving, each hash-equal to the
-    * one-shot frozen-quantizer build over the vectors arrived by that
-    * night (night 2 ≡ the full incremental-index corpus, so its rows
-    * equal `sim_ivf_index_incremental`'s). */
-  def ivfTwoNightTopK(s: SparkSession, dir: String): DataFrame = {
-    val base = stagedIvfTwoNightIndex(s, dir)
-    def night(label: String, n: Long) =
-      s.read.parquet(s"$base/${label}_topk")
-        .select(lit(n).as("night"), col("query_id"), col("cand_id"),
-          col("cosine"), col("rank"))
-    night("night1", 1L).unionByName(night("night2", 2L))
-  }
-
-  // -------------------------------------------------------------------
-  // Two-night loop, COMPRESSED family (VERDICT r14 #4): the same
-  // decide→execute→verify×2 discipline over the IVFPQ artifact —
-  // the maintained index whose nightly consult is the CODEBOOK
-  // (reconstruction drift), not the coarse quantizer. Night N: encode
-  // tonight's arrivals against the FROZEN codebook and append the
-  // (cand_id, codes) rows into the inverted lists → consult (codebook
-  // drift on tonight's arrivals only — in-distribution nights must
-  // take the append branch; small_files must fire, the append
-  // fattened the code lists) → compact → re-consult clears → PROMOTE
-  // (persist the promotion-point serving proof). Each promotion is
-  // hash-exact to the one-shot frozen-codebook build over exactly the
-  // vectors arrived by that night — the ivfTwoNightTopK recipe on the
-  // compressed artifact.
-  // -------------------------------------------------------------------
-
-  /** One night of the compressed-family executor loop: the
-    * [[stagedIvfTwoNightIndex]] night shape with the PQ verbs —
-    * frozen-codebook encode+append, codebook-drift consult baselined
-    * against the codebook's own training snapshot (the same ratchet
-    * argument as the IVF night: re-baselining on appended batches
-    * would let slow drift walk past the bar one night at a time),
-    * bucket compaction, promotion serving. */
-  private def runPqMaintenanceNight(s: SparkSession, dir: String,
-      base: String, nightPred: String, label: String): Unit = {
-    appendIvfPqIncVectors(s, base,
-      corpus(s, dir).filter(expr(nightPred)))
-    val retrain = ivfPqIncDriftReportFrom(s, dir, base,
-        Some(corpus(s, dir).filter(expr(nightPred))))
-      .head().getAs[Boolean]("retrain")
-    require(!retrain, s"PQ two-night loop: $label expected the " +
-      "in-distribution append branch; a drifted night must retrain")
-    require(fatLists(s, base).nonEmpty, s"PQ two-night loop: $label " +
-      "append left no fat lists — the small_files consult should fire")
-    compactIvfIncIndex(s, base, rowSchema = PqPostingsSchema)
-    require(fatLists(s, base).isEmpty, s"PQ two-night loop: $label " +
-      "compact did not clear the small_files consult")
-    ivfPqServeFrom(s, dir, base)
-      .write.mode("overwrite").parquet(s"$base/${label}_topk")
-  }
-
-  /** The compressed two-night artifact, staged once per corpus
-    * version: snapshot build (the only coarse-quantizer AND codebook
-    * training pass), then the nightly cycle twice. */
-  private[graft] def stagedIvfPqTwoNightIndex(s: SparkSession,
-      dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpq2night", dir, vkey) { base =>
-      buildIvfPqIncSnapshot(s, dir, base)
-      runPqMaintenanceNight(s, dir, base, IvfNight1Pred, "night1")
-      runPqMaintenanceNight(s, dir, base, IvfNight2Pred, "night2")
-      base
-    }
-  }
-
-  /** Gate: both promotion points' compressed serving, each hash-equal
-    * to the one-shot frozen-quantizer-and-codebook build over the
-    * vectors arrived by that night (night 2 ≡ the full incremental
-    * corpus, so its rows equal `sim_ivf_pq_index_incremental`'s —
-    * spec-pinned). */
-  def ivfPqTwoNightTopK(s: SparkSession, dir: String): DataFrame = {
-    val base = stagedIvfPqTwoNightIndex(s, dir)
+    * one-shot frozen-header build over the vectors arrived by that
+    * night (night 2 ≡ the full incremental corpus, so its rows equal
+    * [[incTopK]]'s — spec-pinned). */
+  private[graft] def twoNightTopK(c: IndexCodec)(s: SparkSession,
+      dir: String): DataFrame = {
+    val base = stagedTwoNightIndex(c)(s, dir)
     def night(label: String, n: Long) =
       s.read.parquet(s"$base/${label}_topk")
         .select(lit(n).as("night"), col("query_id"), col("cand_id"),
@@ -1047,55 +1016,42 @@ object Similarity {
     * bar separates with ≥1.35× margin on both sides at every SF. */
   val IvfImbalanceBar = 2L
 
-  /** Inverted-list IMBALANCE report for the maintained IVF index — the
-    * skew face of the retrain policy ([[ivfIncDriftReport]] watches
-    * quantization QUALITY; this watches serving LATENCY). All-integer
-    * → hash-exact oracle (the oracle recomputes the frozen-quantizer
-    * assignment and counts). Derivation-only and nearly free: the
-    * grouped count reads only the partition column, so the scan costs
-    * parquet footers, not data pages. */
-  def ivfIncImbalanceReport(s: SparkSession, dir: String): DataFrame =
-    ivfImbalanceFrom(s, stagedIvfIncIndex(s, dir))
-
-  /** The same skew face for the COMPRESSED index family (VERDICT r11
-    * #2): the IVFPQ code postings share the cent_id partitioning and
-    * the same skewed-list serving-latency failure mode, but its
-    * lifecycle consulted only codebook-reconstruction drift — a spike
-    * batch that happens to RECONSTRUCT well (drift under the bar)
-    * would pile onto one code list with nothing watching. Same
-    * all-integer cross-multiply, same footer-only scan (the grouped
-    * count reads only the partition column), same oracle recipe: the
-    * frozen-quantizer assignment counted per list — identical for the
-    * code postings because coarse assignment ignores the codes. */
-  def ivfPqIncImbalanceReport(s: SparkSession, dir: String): DataFrame =
-    ivfImbalanceFrom(s, stagedIvfPqIncIndex(s, dir), PqPostingsSchema)
+  /** Inverted-list IMBALANCE report for a maintained index — the skew
+    * face of the retrain policy (the drift reports watch quantization
+    * QUALITY; this watches serving LATENCY). It matters for both codecs:
+    * the IVF-PQ code postings share the cent_id partitioning, and a
+    * spike batch that happens to RECONSTRUCT well (codebook drift under
+    * its bar) would otherwise pile onto one code list with nothing
+    * watching. All-integer → hash-exact oracle (the oracle recomputes
+    * the frozen-quantizer assignment and counts per list — identical
+    * for the code postings because coarse assignment ignores the
+    * codes). Derivation-only and nearly free: it reads the artifact's
+    * list-size header. */
+  private[graft] def imbalanceReport(c: IndexCodec)(s: SparkSession,
+      dir: String): DataFrame =
+    ivfImbalanceFrom(s, stagedIncIndex(c)(s, dir), c.postingsSchema)
 
   /** Per-list row counts, persisted as part of the maintained-index
-    * artifact at staging time (VERDICT r14 #6) — the FAISS invlists
-    * size-array discipline: a production index carries its list sizes
-    * in the artifact header, so the imbalance consult reads ≤ nlist
-    * header rows instead of re-listing and footer-scanning the whole
-    * postings directory on every call (the listing overhead that
-    * jittered the two imbalance gates around the 3× scaling bar for
-    * two rounds). Written LAST in the staging closure from the FINAL
-    * postings state; the ivfinc/ivfpqinc artifacts are immutable once
-    * staged, so the header cannot go stale. Mid-maintenance bases
-    * (appended/compacted between consults) never carry one and keep
-    * the footer-scan truth path. */
+    * artifact at staging time — the FAISS invlists size-array
+    * discipline: a production index carries its list sizes in the
+    * artifact header, so the imbalance consult reads ≤ nlist header
+    * rows instead of re-listing and footer-scanning the whole postings
+    * directory on every call. Mid-maintenance bases (appended/compacted
+    * between consults) never carry one and keep the footer-scan truth
+    * path. */
   private[graft] def writeListCounts(s: SparkSession, base: String,
-      rowSchema: String = "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-      : Unit =
+      rowSchema: String): Unit =
     s.read.schema(rowSchema).parquet(s"$base/postings")
       .groupBy(col("cent_id")).agg(count(lit(1)).as("c"))
       .coalesce(1).write.mode("overwrite").parquet(s"$base/list_counts")
 
   private[graft] def ivfImbalanceFrom(s: SparkSession, base: String,
-      rowSchema: String = "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-      : DataFrame = {
+      rowSchema: String = Float.postingsSchema): DataFrame = {
     // consult the artifact's own size header when it carries one (the
     // staged immutable indexes); otherwise recount from the postings —
     // identical (cent_id, c) rows either way (spec-pinned parity), so
-    // the aggregate and the retrain verdict cannot differ
+    // the aggregate and the retrain verdict cannot differ. The recount
+    // reads only the partition column: parquet footers, not data pages
     val lc = new org.apache.hadoop.fs.Path(s"$base/list_counts")
     val fs = lc.getFileSystem(s.sparkContext.hadoopConfiguration)
     val counts =
@@ -1111,60 +1067,61 @@ object Similarity {
           lit(IvfImbalanceBar) * col("n_rows")).as("retrain"))
   }
 
-  /** COMPOSITE IVF lifecycle, RETRAIN branch (VERDICT r10 #2 on the
-    * uncompressed family): (1) the snapshot index builds; (2) tonight's
-    * SHIFTED batch appends under the frozen quantizer — the nightly
-    * default — and piles onto one inverted list; (3) the IMBALANCE
-    * report on the maintained artifact returns `retrain` (loud
-    * require); (4) the nightly job RETRAINS: fresh quantizer over the
-    * combined corpus ([[kmeansCentroidBuildFrom]]) and a full postings
-    * rebuild replacing the artifact wholesale (static overwrite — list
-    * membership changes under a new quantizer); (5) serving reads the
-    * retrained artifact. Hash-equal to the from-scratch IVF build on
-    * the combined corpus — the standard oracle rewritten over the
-    * drifted relation. Retraining gives the spike mode its OWN
-    * centroid (spec: the shifted batch's best cosine reads 1.0 against
-    * the new quantizer, vs 0.24 against the frozen one); the residual
-    * list fatness that remains is inherent — the batch is identical
-    * vectors, which no quantizer can split — and at 100 TB that
-    * residue is the signal to route the batch through the DEDUP
-    * family, not to retrain again. */
-  def stagedIvfRetrainIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfretrain", dir, vkey) { base =>
-      buildIvfIncSnapshot(s, dir, base)
-      val drifted = driftedEmbeddings(s, dir)
-      appendIvfIncVectors(s, base, drifted.filter(expr(IvfIncBatchPred))
-        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
+  /** Tonight's SHIFTED arrivals in (cand_id, c_emb) shape. */
+  private def driftedBatch(s: SparkSession, dir: String): DataFrame =
+    driftedEmbeddings(s, dir).filter(expr(IvfIncBatchPred))
+      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+
+  /** The drifted corpus's candidates in (cand_id, c_emb) shape — what
+    * the retrain branches index and refine against, and what the
+    * planner's skewed-artifact consults read as tonight's ACTUAL
+    * arrivals. */
+  private def driftedCorpus(s: SparkSession, dir: String): DataFrame =
+    driftedEmbeddings(s, dir).filter(col("vec_id") >= 10)
+      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
+
+  /** COMPOSITE IVF lifecycle, RETRAIN branch: (1) the snapshot index
+    * builds; (2) tonight's SHIFTED batch appends under the frozen
+    * quantizer — the nightly default — and piles onto one inverted
+    * list; (3) the IMBALANCE report on the maintained artifact returns
+    * `retrain` (loud require); (4) the nightly job RETRAINS: fresh
+    * quantizer over the combined corpus ([[kmeansCentroidBuildFrom]])
+    * and a full postings rebuild replacing the artifact wholesale
+    * (static overwrite — list membership changes under a new
+    * quantizer); (5) serving reads the retrained artifact. Hash-equal
+    * to the from-scratch IVF build on the combined corpus — the
+    * standard oracle rewritten over the drifted relation. Retraining
+    * gives the spike mode its OWN centroid (spec: the shifted batch's
+    * best cosine reads 1.0 against the new quantizer, vs 0.24 against
+    * the frozen one); the residual list fatness that remains is
+    * inherent — the batch is identical vectors, which no quantizer can
+    * split — and at 100 TB that residue is the signal to route the
+    * batch through the DEDUP family, not to retrain again. */
+  def stagedIvfRetrainIndex(s: SparkSession, dir: String): String =
+    staged(Float, "retrain", s, dir) { base =>
+      buildIncSnapshot(Float)(s, dir, base)
+      appendVectors(Float)(s, base, driftedBatch(s, dir))
       val verdict = ivfImbalanceFrom(s, base).head().getAs[Boolean]("retrain")
       require(verdict,
         "retrain lifecycle gate expects the imbalance branch; a " +
           "balanced index must keep appending")
-      writeIvfIndex(s, base, kmeansCentroidBuildFrom(s, drifted),
-        drifted.filter(col("vec_id") >= 10)
-          .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-      base
+      writeIndex(Float)(s, base, Float.trainFrom(s, driftedEmbeddings(s, dir)),
+        driftedCorpus(s, dir))
     }
-  }
 
   def ivfRetrainTopK(s: SparkSession, dir: String): DataFrame =
-    ivfServeFrom(s, stagedIvfRetrainIndex(s, dir), queries(s, dir))
+    serveFrom(Float)(s, dir, stagedIvfRetrainIndex(s, dir))
 
   /** The skewed PRE-retrain state as its own maintained artifact —
     * snapshot index + tonight's spiked batch appended under the frozen
     * quantizer, retrain NOT yet taken (the state a nightly planner
     * inspects; [[stagedIvfRetrainIndex]] can't be shared because it
     * overwrites this state in place when it retrains). */
-  private[graft] def stagedIvfSkewedIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfskew", dir, vkey) { base =>
-      buildIvfIncSnapshot(s, dir, base)
-      appendIvfIncVectors(s, base,
-        driftedEmbeddings(s, dir).filter(expr(IvfIncBatchPred))
-          .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-      base
+  private[graft] def stagedIvfSkewedIndex(s: SparkSession, dir: String): String =
+    staged(Float, "skew", s, dir) { base =>
+      buildIncSnapshot(Float)(s, dir, base)
+      appendVectors(Float)(s, base, driftedBatch(s, dir))
     }
-  }
 
   /** The drifted corpus with tonight's batch EXACT-DEDUPED — the
     * dedup-family routing the retrain scaladoc prescribes for the
@@ -1195,16 +1152,13 @@ object Similarity {
     * quantizer over the deduplicated corpus, full postings rewrite.
     * After this verb every consult reads healthy (spec + oracle:
     * drift clean, lists balanced, one file per list). */
-  def stagedIvfDedupRetrainIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfddrt", dir, vkey) { base =>
+  def stagedIvfDedupRetrainIndex(s: SparkSession, dir: String): String =
+    staged(Float, "ddrt", s, dir) { base =>
       val dd = dedupedDriftedEmbeddings(s, dir)
-      writeIvfIndex(s, base, kmeansCentroidBuildFrom(s, dd),
+      writeIndex(Float)(s, base, Float.trainFrom(s, dd),
         dd.filter(col("vec_id") >= 10)
           .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-      base
     }
-  }
 
   /** The NIGHTLY MAINTENANCE PLANNER (VERDICT r11 #7) — the
     * reference's scheduler idea applied to index maintenance: every
@@ -1252,15 +1206,17 @@ object Similarity {
   /** One declared artifact of a maintenance document: its table name,
     * index family (`bm25` | `ivf` | `ivfpq`), which maintained index
     * kind it is (`incremental` | `compacted` | `skewed`), the consults
-    * to run, and optional per-consult BAR overrides (VERDICT r13 #7 —
-    * the reference's config discipline puts every knob in the
-    * document): an absent key means the registry default (2× list
+    * to run, and optional per-consult BAR overrides (the reference's
+    * config discipline puts every knob in the document): an absent key means the registry default (2× list
     * imbalance, 0.25 coarse drift, 0.05 codebook drift, 1.5× df
     * growth, >1 files per list); a present key re-decides that consult
     * against the declared bar, same report, same arithmetic shape. */
   private[graft] final case class MaintArtifact(name: String,
       family: String, index: String, consults: Seq[String],
       bars: Map[String, Double] = Map.empty)
+
+  /** The vector families of a maintenance document, by codec. */
+  private val codecOf: Map[String, IndexCodec] = Map("ivf" -> Float, "ivfpq" -> Pq)
 
   /** The registry the declarative document draws from: (family, index)
     * → the staged artifact path + the consult corpus override (the
@@ -1273,18 +1229,18 @@ object Similarity {
         (TextAnalysis.stagedBm25IncIndex(s, dir), None)
       case ("bm25", "compacted") =>
         (TextAnalysis.stagedBm25CompactIndex(s, dir), None)
-      case ("ivf", "incremental") => (stagedIvfIncIndex(s, dir), None)
-      case ("ivf", "compacted") => (stagedIvfCompactIndex(s, dir), None)
+      case ("ivf" | "ivfpq", "incremental") =>
+        (stagedIncIndex(codecOf(family))(s, dir), None)
+      case ("ivf" | "ivfpq", "compacted") =>
+        (stagedCompactIndex(codecOf(family))(s, dir), None)
       case ("ivf", "skewed") => (stagedIvfSkewedIndex(s, dir),
-        Some(skewConsultCorpus(s, dir)))
-      case ("ivfpq", "incremental") => (stagedIvfPqIncIndex(s, dir), None)
-      case ("ivfpq", "compacted") => (stagedIvfPqCompactIndex(s, dir), None)
+        Some(driftedCorpus(s, dir)))
       // verb post-states the EXECUTOR re-consults (not declarable as
       // plan inputs on the gate corpus, but the registry is one)
       case ("bm25", "restat") =>
         (TextAnalysis.stagedBm25RestatIndex(s, dir), None)
       case ("ivf", "retrained") => (stagedIvfRetrainIndex(s, dir),
-        Some(skewConsultCorpus(s, dir)))
+        Some(driftedCorpus(s, dir)))
       case ("ivf", "dedup_retrained") => (stagedIvfDedupRetrainIndex(s, dir),
         Some(dedupedDriftedEmbeddings(s, dir).filter(col("vec_id") >= 10)
           .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))))
@@ -1296,7 +1252,7 @@ object Similarity {
     * artifact-derived read (1-row aggregate collects, a ≤ terms-row
     * staleness report, or a ≤ nlist driver directory listing), never a
     * training job. Unknown names fail loudly. `bars` carries the
-    * document's per-consult overrides (VERDICT r13 #7): absent →
+    * document's per-consult overrides: absent →
     * exactly the registry-default verdict column; present → the SAME
     * bounded report re-decided against the declared bar. */
   private def consultOne(s: SparkSession, dir: String, artifact: String,
@@ -1318,8 +1274,9 @@ object Similarity {
         ConsultRow(artifact, "retrain", consult,
           driftFired(ivfPqIncDriftReportFrom(s, dir, base)))
       case "list_imbalance" =>
-        val rep = if (family == "ivfpq") ivfImbalanceFrom(s, base, PqPostingsSchema)
-          else ivfImbalanceFrom(s, base)
+        require(codecOf.contains(family),
+          s"list_imbalance consults the inverted lists — not a $family artifact")
+        val rep = ivfImbalanceFrom(s, base, codecOf(family).postingsSchema)
         val fired = bar match {
           case None => firedOf(rep)
           case Some(b) =>
@@ -1350,12 +1307,6 @@ object Similarity {
       case c => throw new IllegalArgumentException(s"unknown consult '$c'")
     }
   }
-
-  /** The skewed-artifact consult corpus: tonight's ACTUAL (drifted)
-    * arrivals in (cand_id, c_emb) shape. */
-  private def skewConsultCorpus(s: SparkSession, dir: String): DataFrame =
-    driftedEmbeddings(s, dir).filter(col("vec_id") >= 10)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
 
   /** The gate corpus's maintenance document — what the hand-built
     * planner runs and what the declarative ConfigJson document must
@@ -1535,11 +1486,6 @@ object Similarity {
         "consults and has no escalation")
   }
 
-  /** Spec hook: serve the gate query slice from an arbitrary index
-    * base (before/after-compaction bit-equality checks). */
-  private[graft] def ivfServeForSpec(s: SparkSession, base: String,
-      dir: String): DataFrame = ivfServeFrom(s, base, queries(s, dir))
-
   /** Quantization-quality drift of the batch against the frozen
     * quantizer — the retrain trigger for the nightly append
     * ([[Similarity.centroidDrift]] specialized to index maintenance):
@@ -1565,7 +1511,7 @@ object Similarity {
     * never cross an exchange. Derivation-only: consumes the staged
     * index's centroid file, zero training jobs. */
   def ivfIncDriftReport(s: SparkSession, dir: String): DataFrame =
-    ivfIncDriftReportFrom(s, dir, stagedIvfIncIndex(s, dir))
+    ivfIncDriftReportFrom(s, dir, stagedIncIndex(Float)(s, dir))
 
   /** The drift report against an ARBITRARY index artifact — the
     * lifecycle gate consults it mid-maintenance (artifact centroids
@@ -1576,7 +1522,7 @@ object Similarity {
       // skewed-artifact consult passes tonight's ACTUAL (drifted)
       // arrivals; defaults to the raw table
       corpusOpt: Option[DataFrame] = None): DataFrame = {
-    val cents = readCentroids(s, s"$base/centroids")
+    val cents = readHeaderFile(s, s"$base/centroids")
     val best = array_max(transform(typedLit(cents), c =>
       call_function("graft_cosine", col("c_emb"), c.getField("_2"))))
     def meanQ(df: DataFrame): DataFrame =
@@ -1701,7 +1647,7 @@ object Similarity {
     * — hash-exact, so the incremental path is proven lossless. */
   def semanticDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val base = stagedSemIncSnapshot(s, dir)
-    val cents = readCentroids(s, s"$base/centroids")
+    val cents = readHeaderFile(s, s"$base/centroids")
     val snap = s.read
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, cent_id BIGINT, kept BOOLEAN")
       .parquet(s"$base/snapshot")
@@ -1835,16 +1781,11 @@ object Similarity {
     book
   }
 
-  /** Per-subspace best codeword as ONE narrow array expression (the
-    * assignNearestNarrow recipe): min over (L2, code_id) structs, L2 as
-    * the sequential zip_with fold both engines share. The struct also
-    * carries the codeword subvector so encode and reconstruct are the
-    * same projection — zero shuffle, zero join. */
-  /** Fused-kernel forms of the encode / reconstruct projections (r17,
-    * guide §4): ONE native expression per row instead of nSub × K
-    * allocated zip_with arrays and interpreted struct array_mins —
-    * bit-identical to [[pqBest]] by construction (see
-    * [[graft.functions.PqKernel]]; parity is spec-gated). */
+  /** Fused-kernel forms of the encode / reconstruct projections: ONE
+    * native expression per row instead of nSub × K allocated zip_with
+    * arrays and interpreted struct array_mins — bit-identical to
+    * [[pqBest]] by construction (see [[graft.functions.PqKernel]];
+    * parity is spec-gated). */
   private def pqCodesCol(book: Seq[(Long, Seq[Float])], embCol: String): Column =
     call_function("graft_pq_codes", col(embCol),
       typedLit(book.map(_._2.toSeq)), typedLit(book.map(_._1)),
@@ -1856,7 +1797,10 @@ object Similarity {
       lit(PqSubspaces))
 
   /** The HOF reference form of the per-subspace argmin — kept as the
-    * executable spec twin the fused kernel is pinned against. */
+    * executable spec twin the fused kernel is pinned against: min over
+    * (L2, code_id) structs, L2 as the sequential zip_with fold both
+    * engines share; the struct also carries the codeword subvector, so
+    * encode and reconstruct are the same projection. */
   private[graft] def pqBest(book: Seq[(Long, Seq[Float])], embCol: String, m: Int,
       sub: Int): Column = {
     val subBook = book.map { case (cid, cw) => (cid, cw.slice(m * sub, (m + 1) * sub)) }
@@ -1875,7 +1819,6 @@ object Similarity {
   private[graft] def pqEncode(s: SparkSession, dir: String): DataFrame = {
     val book = pqCodebook(s, dir)
     require(book.nonEmpty, "empty PQ codebook")
-    val sub = book.head._2.length / PqSubspaces
     Tables.embeddingsParallel(s, dir)
       .select(col("vec_id"), pqCodesCol(book, "embedding").as("codes"))
   }
@@ -1893,7 +1836,6 @@ object Similarity {
   def pqTopK(s: SparkSession, dir: String): DataFrame = {
     val book = pqCodebook(s, dir)
     require(book.nonEmpty, "empty PQ codebook")
-    val sub = book.head._2.length / PqSubspaces
     val recon = corpus(s, dir).select(col("cand_id"),
       pqReconCol(book, "c_emb").as("recon"))
     val scored = broadcast(queries(s, dir)).crossJoin(recon)
@@ -1922,7 +1864,6 @@ object Similarity {
     val cents = kmeansCentroidSeq(s, dir)
     val book = pqCodebook(s, dir)
     require(book.nonEmpty, "empty PQ codebook")
-    val sub = book.head._2.length / PqSubspaces
     val assigned = assignNearestNarrow(corpus(s, dir), cents, "cand_id", "c_emb")
     val recon = assigned.select(col("cent_id"), col("cand_id"),
       pqReconCol(book, "c_emb").as("recon"))
@@ -1940,96 +1881,25 @@ object Similarity {
     topKPerQuery(exact)
   }
 
-  /** Build the FULL persisted IVFPQ index — centroids + PQ codebook +
-    * postings carrying (cand_id, codes) partitioned by inverted-list
-    * id. This is the complete FAISS-style index FILE: the coarse
-    * serving stage reads CODES off disk (M·log2(K) bits per vector,
-    * never the floats), reconstruction happens at serve time from the
-    * ≤ PqCodewords codebook literal, and raw embeddings are touched
-    * only by the bounded exact-refine join. */
-  def buildIvfPqIndexLineage(s: SparkSession, dir: String,
-      base: String): String = {
-    writeIvfPqIndex(s, base, kmeansCentroidSeq(s, dir), pqCodebook(s, dir),
-      corpus(s, dir))
-    base
-  }
-
-  /** ONE writer for the on-disk IVFPQ index layout (centroid file +
-    * codebook file + partitionBy(cent_id) CODE postings of `vecs`) —
-    * shared by the one-shot build, the incremental snapshot, and the
-    * retrain branch, as [[writeIvfIndex]] is for the uncompressed
-    * family: the layout every IVFPQ serving path reads is written in
-    * exactly one place. */
-  private def writeIvfPqIndex(s: SparkSession, base: String,
-      cents: Seq[(Long, Seq[Float])], book: Seq[(Long, Seq[Float])],
-      vecs: DataFrame): Unit = {
-    import s.implicits._
-    require(book.nonEmpty, "empty PQ codebook")
-    cents.map { case (cid, emb) => (cid, emb.toArray) }
-      .toDF("cent_id", "cent_emb")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/centroids")
-    book.map { case (cid, cw) => (cid, cw.toArray) }
-      .toDF("code_id", "codeword").coalesce(1)
-      .write.mode("overwrite").parquet(s"$base/codebook")
-    val sub = book.head._2.length / PqSubspaces
-    assignNearestNarrow(vecs, cents, "cand_id", "c_emb")
-      .select(col("cand_id"), pqCodesCol(book, "c_emb").as("codes"),
-        col("cent_id"))
-      // one file per code list on a full write — the [[writeIvfIndex]]
-      // layout contract (see its scaladoc; the small-files consult
-      // reads it); explicit width so AQE can't serialize the write
-      // into one task (r17 — see writeIvfIndex)
-      .repartition(math.max(1, cents.size), col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$base/postings")
-  }
-
-  def stagedIvfPqIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpqidx", dir, vkey) { base =>
-      buildIvfPqIndexLineage(s, dir, base)
-    }
-  }
-
-  /** IVFPQ retrieval served ENTIRELY from the persisted index for the
-    * coarse stage: probes prune the postings partitions (DPP, as
-    * [[ivfTopKIndexed]]), candidates score against a reconstruction
-    * assembled from their on-disk CODES and the codebook literal
-    * (element_at per subspace — the scan reads 2 bytes of codes per
-    * vector where the in-memory path reads 256 bytes of floats), then
-    * the RerankCoarse best per query refine through one exact cosine
-    * pass over raw embeddings. Bit-equal to [[ivfPqTopK]] — same
-    * composed oracle. */
+  /** IVFPQ retrieval served from the persisted one-shot index: probes
+    * prune the postings partitions (DPP, as [[ivfTopKIndexed]]),
+    * candidates score against a reconstruction assembled from their
+    * on-disk CODES and the codebook literal (the scan reads 2 bytes of
+    * codes per vector where the in-memory path reads 256 bytes of
+    * floats), then the RerankCoarse best per query refine through one
+    * exact cosine pass over raw embeddings. Bit-equal to [[ivfPqTopK]]
+    * — same composed oracle. */
   def ivfPqTopKIndexed(s: SparkSession, dir: String): DataFrame =
-    ivfPqServeFrom(s, dir, stagedIvfPqIndex(s, dir))
+    serveFrom(Pq)(s, dir, stagedIvfPqIndex(s, dir))
 
-  /** Serve from ANY persisted IVFPQ index layout (centroids + codebook
-    * + codes-postings under `base`) — shared by the one-shot index and
-    * the incrementally-maintained one. */
-  private def ivfPqServeFrom(s: SparkSession, dir: String,
-      base: String): DataFrame =
-    ivfPqServeCore(s, dir, base,
-      s.read.schema(PqPostingsSchema).parquet(s"$base/postings"))
-
-  /** The streaming-append topology for the compressed index: codes
-    * postings = immutable snapshot ∪ per-call delta, quantizer and
-    * codebook from the snapshot artifact. Row-identical to one merged
-    * dir. */
-  private[graft] def ivfPqServeUnion(s: SparkSession, dir: String,
-      snapBase: String, deltaBase: String): DataFrame = {
-    def posts(b: String) =
-      s.read.schema(PqPostingsSchema).parquet(s"$b/postings")
-    ivfPqServeCore(s, dir, snapBase,
-      posts(snapBase).unionByName(posts(deltaBase)))
-  }
-
-  private def ivfPqServeCore(s: SparkSession, dir: String,
-      artifactBase: String, postings: DataFrame,
-      // the exact-refine stage reads raw embeddings; the retrained
-      // index's corpus is the DRIFTED relation, not the raw table
-      refineCorpus: Option[DataFrame] = None): DataFrame = {
-    val cents = readCentroids(s, s"$artifactBase/centroids")
-    val book = readCodebook(s, s"$artifactBase/codebook")
+  /** The [[Pq]] codec's serving: probe the coarse lists, score the
+    * candidates' code reconstructions (element_at per subspace), and
+    * refine the RerankCoarse best per query with one exact cosine pass
+    * over `refine` — the raw corpus, or the drifted corpus a retrained
+    * index was built from. */
+  private def pqServe(h: IndexHeader, postings: DataFrame, qdf: DataFrame,
+      refine: DataFrame): DataFrame = {
+    val book = h.book
     require(book.zipWithIndex.forall { case ((cid, _), i) => cid == i.toLong },
       "codebook ids must be dense 0..K-1 for positional reconstruction")
     val sub = book.head._2.length / PqSubspaces
@@ -2038,157 +1908,22 @@ object Similarity {
     val recon = concat((0 until PqSubspaces).map(m =>
       element_at(typedLit(subBooks(m)),
         (col("codes")(m) + 1L).cast("int"))): _*)
-    val probes = probeTopCentroids(queries(s, dir), cents)
+    val probes = probeTopCentroids(qdf, h.cents)
     val coarse = broadcast(probes).join(postings, Seq("cent_id"))
       .select(col("query_id"), col("cand_id"),
         call_function("graft_cosine", col("q_emb"), recon).as("pq_cos"))
     val topC = graft.functions.TopK.perGroup(
       coarse, "query_id", "cand_id", "pq_cos", RerankCoarse)
     val exact = topC
-      .join(refineCorpus.getOrElse(corpus(s, dir)), "cand_id")
-      .join(broadcast(queries(s, dir)), "query_id")
+      .join(refine, "cand_id")
+      .join(broadcast(qdf), "query_id")
       .select(col("query_id"), col("cand_id"),
         expr("graft_cosine(q_emb, c_emb)").as("cosine"))
     topKPerQuery(exact)
   }
 
-  /** Incremental maintenance of the persisted IVFPQ index — the
-    * [[buildIvfIncIndex]] contract for the COMPRESSED index: the
-    * coarse quantizer AND the PQ codebook train without tonight's
-    * batch; the nightly job reads both back from the artifact (zero
-    * training state), encodes the batch in one narrow pass, and
-    * appends (cand_id, codes) files into the existing inverted-list
-    * dirs. Per-night I/O ∝ batch; snapshot code files untouched. */
-  def buildIvfPqIncIndex(s: SparkSession, dir: String, base: String): String = {
-    buildIvfPqIncSnapshot(s, dir, base)
-    appendIvfPqIncBatch(s, dir, base)
-    base
-  }
-
-  def buildIvfPqIncSnapshot(s: SparkSession, dir: String, base: String): String = {
-    val pred = s"NOT ($IvfIncBatchPred)"
-    writeIvfPqIndex(s, base,
-      kmeansCentroidSeqFiltered(s, dir, pred),
-      pqCodebookFiltered(s, dir, pred),
-      corpus(s, dir).filter(!expr(IvfIncBatchPred)))
-    base
-  }
-
-  def appendIvfPqIncBatch(s: SparkSession, dir: String, base: String): Unit =
-    appendIvfPqIncVectors(s, base,
-      corpus(s, dir).filter(expr(IvfIncBatchPred)))
-
-  /** Encode-and-append ANY (cand_id, c_emb) vector frame into the PQ
-    * index at `base` — the per-micro-batch entry point the streaming
-    * maintenance gate reuses (the [[appendIvfIncVectors]] contract for
-    * the compressed artifact: frozen centroids AND codebook read back
-    * from the index, zero training state). */
-  /** The encoded-codes frame for a vector batch against the frozen
-    * artifact centroids AND codebook (zero training state). */
-  private def ivfPqIncEncoded(s: SparkSession, base: String,
-      vecs: DataFrame): DataFrame = {
-    val frozen = readCentroids(s, s"$base/centroids")
-    val book = readCodebook(s, s"$base/codebook")
-    val sub = book.head._2.length / PqSubspaces
-    assignNearestNarrow(vecs, frozen, "cand_id", "c_emb")
-      .select(col("cand_id"), pqCodesCol(book, "c_emb").as("codes"),
-        col("cent_id"))
-  }
-
-  private[graft] def appendIvfPqIncVectors(s: SparkSession, base: String,
-      vecs: DataFrame): Unit =
-    ivfPqIncEncoded(s, base, vecs)
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$base/postings")
-
-  /** Streaming entry: idempotent IVFPQ append for micro-batch `bid`;
-    * `artifactBase` locates the frozen quantizer + codebook (defaults
-    * to the append target — the delta topology reads them from the
-    * shared snapshot). */
-  private[graft] def appendIvfPqIncVectorsIdempotent(s: SparkSession,
-      base: String, vecs: DataFrame, bid: Long,
-      artifactBase: String = null): Unit = {
-    val art = Option(artifactBase).getOrElse(base)
-    // explicit-width repartition for the same single-task-write reason
-    // as [[appendIvfIncVectorsIdempotent]] (r17, guide §2.6/§6.2)
-    val nlist = math.max(1, readCentroids(s, s"$art/centroids").size)
-    publishStagedAppend(s, base, bid) { stage =>
-      ivfPqIncEncoded(s, art, vecs)
-        .repartition(nlist, col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(stage)
-    }
-  }
-
-  def stagedIvfPqIncIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpqinc", dir, vkey) { base =>
-      val b = buildIvfPqIncIndex(s, dir, base)
-      writeListCounts(s, b, PqPostingsSchema) // size header (final state)
-      b
-    }
-  }
-
-  /** Gate: IVFPQ serving from the incrementally-maintained persisted
-    * index. Hash-equal to the one-shot build under the frozen
-    * quantizer-and-codebook contract — the oracle trains both stages
-    * without the batch and encodes/assigns the full corpus. */
-  def ivfPqIncTopK(s: SparkSession, dir: String): DataFrame =
-    ivfPqServeFrom(s, dir, stagedIvfPqIncIndex(s, dir))
-
-  /** PQ postings rows are (cand_id, codes, cent_id) — the codes array
-    * replaces the float vector, everything else matches the IVF row. */
-  val PqPostingsSchema = "cand_id BIGINT, codes ARRAY<BIGINT>, cent_id BIGINT"
-
-  /** Gate: serving from the COMPACTED incrementally-maintained IVFPQ
-    * index — [[compactIvfIncIndex]] applied to the CODES postings (the
-    * small-files closure for the compressed index's nightly appends;
-    * codes are integers, so rows survive the rewrite bit-exactly and
-    * serving shares the incremental gate's oracle verbatim). */
-  def stagedIvfPqCompactIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpqcmp", dir, vkey) { base =>
-      buildIvfPqIncIndex(s, dir, base)
-      compactIvfIncIndex(s, base, rowSchema = PqPostingsSchema)
-      base
-    }
-  }
-
-  def ivfPqCompactTopK(s: SparkSession, dir: String): DataFrame =
-    ivfPqServeFrom(s, dir, stagedIvfPqCompactIndex(s, dir))
-
-  /** COMPOSITE nightly-maintenance lifecycle for the COMPRESSED index
-    * — [[ivfLifecycleTopK]]'s story for the IVFPQ artifact, so all
-    * three maintained indexes (IVF, IVFPQ, BM25 postings) carry the
-    * same composed proof: snapshot build (quantizer + codebook — the
-    * only training passes) → two-micro-batch streamed idempotent
-    * code appends under the frozen artifacts → BOTH drift consults
-    * (coarse-quantizer drift and codebook reconstruction drift) take
-    * the append branch, required loudly → crash-safe code-list
-    * compaction → serving. Hash-equal to the one-shot
-    * frozen-quantizer-and-codebook rebuild — the incremental IVFPQ
-    * oracle verbatim. */
-  def stagedIvfPqLifecycleIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpqlife", dir, vkey) { base =>
-      buildIvfPqIncSnapshot(s, dir, base)
-      graft.streaming.Streams.runPqIndexAppendStream(s, dir, base)
-      val coarse = ivfIncDriftReportFrom(s, dir, base)
-        .head().getAs[Boolean]("retrain")
-      val book = ivfPqIncDriftReportFrom(s, dir, base)
-        .head().getAs[Boolean]("retrain")
-      require(!coarse && !book,
-        "IVFPQ lifecycle gate expects both append branches; a drifted " +
-          "corpus must retrain its quantizer/codebook, not serve frozen")
-      compactIvfIncIndex(s, base, rowSchema = PqPostingsSchema)
-      base
-    }
-  }
-
-  def ivfPqLifecycleTopK(s: SparkSession, dir: String): DataFrame =
-    ivfPqServeFrom(s, dir, stagedIvfPqLifecycleIndex(s, dir))
-
-  /** COMPOSITE lifecycle, RETRAIN branch (VERDICT r10 #2 — the branch
-    * every append lifecycle loudly refuses, now gated end-to-end):
+  /** COMPOSITE lifecycle, RETRAIN branch for the compressed index — the
+    * branch every append lifecycle loudly refuses, gated end-to-end:
     * (1) last night's snapshot index builds (frozen quantizer +
     * codebook + snapshot code postings); (2) tonight's batch arrives
     * SHIFTED into a spike subspace ([[spikeEmb]] — in-distribution to
@@ -2209,40 +1944,23 @@ object Similarity {
     * retrain path is proven, not recall-trusted. At 100 TB this is
     * the quarterly re-shard: drift trips once, one training job
     * amortizes over the next N nightly appends. */
-  def stagedIvfPqRetrainIndex(s: SparkSession, dir: String): String = {
-    val vkey = Tables.versionedKey(s, dir, "embeddings")
-    Tables.stagedArtifact("ivfpqretrain", dir, vkey) { base =>
-      buildIvfPqIncSnapshot(s, dir, base)
-      val drifted = driftedEmbeddings(s, dir)
-      val batch = drifted.filter(expr(IvfIncBatchPred))
-        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-      val verdict = ivfPqIncDriftReportFrom(s, dir, base, Some(batch))
+  def stagedIvfPqRetrainIndex(s: SparkSession, dir: String): String =
+    staged(Pq, "retrain", s, dir) { base =>
+      buildIncSnapshot(Pq)(s, dir, base)
+      val verdict = ivfPqIncDriftReportFrom(s, dir, base, Some(driftedBatch(s, dir)))
         .head().getAs[Boolean]("retrain")
       require(verdict,
         "retrain lifecycle gate expects the codebook-drift branch; an " +
           "in-distribution batch must append, not retrain")
-      writeIvfPqIndex(s, base,
-        kmeansCentroidBuildFrom(s, drifted),
-        pqCodebookBuildFrom(s, drifted),
-        drifted.filter(col("vec_id") >= 10)
-          .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-      base
+      writeIndex(Pq)(s, base, Pq.trainFrom(s, driftedEmbeddings(s, dir)),
+        driftedCorpus(s, dir))
     }
-  }
 
   def ivfPqRetrainTopK(s: SparkSession, dir: String): DataFrame = {
     val base = stagedIvfPqRetrainIndex(s, dir)
-    ivfPqServeCore(s, dir, base,
-      s.read.schema(PqPostingsSchema).parquet(s"$base/postings"),
-      refineCorpus = Some(driftedEmbeddings(s, dir)
-        .filter(col("vec_id") >= 10)
-        .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))))
+    pqServe(Pq.readHeader(s, base), postingsOf(Pq, s, base), queries(s, dir),
+      driftedCorpus(s, dir))
   }
-
-  /** Spec hook: IVFPQ serving from an arbitrary index base
-    * (before/after-compaction bit-equality checks). */
-  private[graft] def ivfPqServeForSpec(s: SparkSession, dir: String,
-      base: String): DataFrame = ivfPqServeFrom(s, dir, base)
 
   /** Reconstruction-drift bar for the PQ codebook retrain trigger.
     * Measured on this corpus: the snapshot−batch reconstruction-cosine
@@ -2257,8 +1975,8 @@ object Similarity {
     * [[IvfIncDriftBar]]. */
   val PqIncDriftBar = 0.05
 
-  /** Codebook-staleness drift as a first-class ORACLED gate row
-    * (VERDICT r9 #4): [[ivfIncDriftReport]] covers the coarse
+  /** Codebook-staleness drift as a first-class ORACLED gate row:
+    * [[ivfIncDriftReport]] covers the coarse
     * quantizer, but the PQ CODEBOOK can go stale silently — appended
     * vectors still land in the right inverted lists while their codes
     * reconstruct poorly, decaying serving recall with no error
@@ -2272,7 +1990,7 @@ object Similarity {
     * zero training jobs; two narrow passes + a 1-row combine —
     * embeddings never cross an exchange. */
   def ivfPqIncDriftReport(s: SparkSession, dir: String): DataFrame =
-    ivfPqIncDriftReportFrom(s, dir, stagedIvfPqIncIndex(s, dir))
+    ivfPqIncDriftReportFrom(s, dir, stagedIncIndex(Pq)(s, dir))
 
   /** The codebook-drift report against an ARBITRARY index artifact —
     * the IVFPQ lifecycle gates consult it mid-maintenance; `batchVecs`
@@ -2280,8 +1998,7 @@ object Similarity {
     * (shifted) arrivals. Artifact codebook only, zero training. */
   private[graft] def ivfPqIncDriftReportFrom(s: SparkSession, dir: String,
       base: String, batchVecs: Option[DataFrame] = None): DataFrame = {
-    val book = readCodebook(s, s"$base/codebook")
-    val sub = book.head._2.length / PqSubspaces
+    val book = readHeaderFile(s, s"$base/codebook")
     def meanQ(df: DataFrame): DataFrame = {
       val recon = pqReconCol(book, "c_emb")
       df.select(floor(call_function("graft_cosine", col("c_emb"), recon)
@@ -2305,7 +2022,6 @@ object Similarity {
   def ivfPqIncRetrainSignal(s: SparkSession, dir: String,
       batch: Option[DataFrame] = None): (Double, Boolean) = {
     val book = pqCodebookFiltered(s, dir, s"NOT ($IvfIncBatchPred)")
-    val sub = book.head._2.length / PqSubspaces
     def meanRecon(df: DataFrame): Double = {
       val recon = pqReconCol(book, "c_emb")
       df.select(call_function("graft_cosine", col("c_emb"), recon).as("c"))
@@ -2819,10 +2535,8 @@ object Similarity {
       .select(col("query_doc"), col("doc_id"), col("rank").as("lex_rank"))
     // ---- dense arm: one DPP-pruned list join for the whole batch ----
     val ivfBase = stagedIvfIndex(s, dir)
-    val cents = readCentroids(s, s"$ivfBase/centroids")
-    val postings = s.read
-      .schema("cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-      .parquet(s"$ivfBase/postings")
+    val cents = Float.readHeader(s, ivfBase).cents
+    val postings = postingsOf(Float, s, ivfBase)
     val qdf = Tables.embeddings(s, dir)
       .filter(col("vec_id").isInCollection(queryDocs))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -2932,7 +2646,7 @@ object Similarity {
           .cast("long").as("rank"))
   }
 
-  /** HYBRID retrieval over the PERSISTED arms (VERDICT r9 #2) — the
+  /** HYBRID retrieval over the PERSISTED arms — the
     * 100 TB serving shape [[hybridRrfTopK]]'s own scaladoc promises,
     * gated: the LEXICAL arm serves from the staged BM25 postings index
     * (query terms = the query doc's top-tf terms, tokenized from the
@@ -2949,7 +2663,7 @@ object Similarity {
   def hybridIndexTopK(s: SparkSession, dir: String): DataFrame =
     hybridIndexTopKFor(s, dir, HybridQueryDoc)
 
-  /** HYBRID serving ACROSS arm maintenance (VERDICT r10 #4): the two
+  /** HYBRID serving ACROSS arm maintenance: the two
     * arms each have composite lifecycle gates; this gate proves the
     * FUSION stays correct over the incrementally-MAINTAINED artifacts
     * — the lexical arm serves from the BM25 lifecycle index (frozen-
@@ -2965,9 +2679,9 @@ object Similarity {
   def hybridLifecycleTopK(s: SparkSession, dir: String): DataFrame =
     hybridIndexTopKFor(s, dir, HybridQueryDoc,
       lexBaseOpt = Some(TextAnalysis.stagedBm25LifecycleIndex(s, dir)),
-      ivfBaseOpt = Some(stagedIvfLifecycleIndex(s, dir)))
+      ivfBaseOpt = Some(stagedLifecycleIndex(Float)(s, dir)))
 
-  /** HYBRID serving across an arm RETRAIN (VERDICT r11 #1):
+  /** HYBRID serving across an arm RETRAIN:
     * [[hybridLifecycleTopK]] composes the two arms' APPEND-branch
     * lifecycles; this gate proves the fusion stays correct when each
     * arm takes its HEAVY maintenance branch — the riskiest handoff in
@@ -3021,10 +2735,8 @@ object Similarity {
       row_number().over(rankW).cast("long").as("lex_rank"))
     // ---- dense arm: staged persisted IVF index ----
     val ivfBase = ivfBaseOpt.getOrElse(stagedIvfIndex(s, dir))
-    val cents = readCentroids(s, s"$ivfBase/centroids")
-    val postings = s.read
-      .schema("cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-      .parquet(s"$ivfBase/postings")
+    val cents = Float.readHeader(s, ivfBase).cents
+    val postings = postingsOf(Float, s, ivfBase)
     val qdf = Tables.embeddings(s, dir).filter(col("vec_id") === queryDoc)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val probes = probeTopCentroids(qdf, cents)

@@ -1212,15 +1212,24 @@ object TextAnalysis {
       docs: DataFrame, bid: Long): Unit =
     Similarity.publishStagedAppend(s, base, bid, "bucket") { stage =>
       bm25PostingsOf(bm25TfsOf(docs))
-        // explicit-width repartition (r17, guide §2.6/§6.2): AQE
-        // coalesces the tf groupBy's tiny shuffle to ~1 partition, so
-        // the dynamic partitionBy write was one task serially opening
-        // ~Bm25Buckets parquet writers; a user-fixed width is exempt
-        // from coalescing and spreads the buckets across tasks. One
-        // file per touched bucket per bid either way.
+        // explicit-width repartition: AQE coalesces the tf groupBy's
+        // tiny shuffle to ~1 partition, and a one-task partitionBy
+        // write opens ~Bm25Buckets parquet writers serially; a
+        // user-fixed width is exempt from coalescing and spreads the
+        // buckets across tasks. One file per touched bucket per bid
+        // either way.
         .repartition(Bm25Buckets, col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(stage)
     }
+
+  /** Tonight's documents as the two-micro-batch append stream into the
+    * term buckets at `base`, each micro-batch published idempotently. */
+  private[graft] def appendBm25TonightStream(s: SparkSession, dir: String,
+      base: String): Unit =
+    graft.streaming.Streams.runAppendStream(s, base,
+      Tables.documents(s, dir).filter(expr(Bm25IncBatchPred))
+        .select(col("doc_id"), col("text")),
+      "doc_id LONG, text STRING")(appendBm25Idempotent(s, base, _, _))
 
   /** Build the index artifact: one corpus tokenize pass feeds the
     * postings write (shuffled by bucket — the only corpus-sized
@@ -1233,7 +1242,7 @@ object TextAnalysis {
     tfs.groupBy(col("doc_id")).agg(first(col("len")).as("len"))
       .agg(count(lit(1)).as("n_docs"), sum(col("len")).as("total_len"))
       .coalesce(1).write.mode("overwrite").parquet(s"$base/stats")
-    // explicit repartition widths (r17 — see Similarity.writeIvfIndex):
+    // explicit repartition widths (see Similarity.writeLists):
     // repartition(col) is AQE-coalescible and a coalesced write opens
     // all ≤Bm25Buckets parquet writers serially in one task; the fixed
     // width is exempt and keeps one file per bucket (each bucket whole
@@ -1480,7 +1489,7 @@ object TextAnalysis {
   }
 
   /** COMPOSITE lexical-index lifecycle over ONE staged index — the
-    * [[graft.operators.Similarity.ivfLifecycleTopK]] story for the
+    * [[graft.operators.Similarity.lifecycleTopK]] story for the
     * BM25 postings: snapshot build (frozen stats — the only corpus
     * tokenize) → tonight's docs as a real two-micro-batch STREAM of
     * idempotent bucket appends → the drift report consults the
@@ -1491,7 +1500,7 @@ object TextAnalysis {
     val vkey = Tables.versionedKey(s, dir, "documents")
     Tables.stagedArtifact("bm25life", dir, vkey) { b =>
       buildBm25Index(s, dir, b, Some(s"NOT ($Bm25IncBatchPred)"))
-      graft.streaming.Streams.runBm25AppendStream(s, dir, b)
+      appendBm25TonightStream(s, dir, b)
       val drift = bm25DriftFrom(s, b)
       require(!drift.collect().exists(_.getAs[Boolean]("retrain")),
         "lexical lifecycle gate expects the append branch; drifted " +

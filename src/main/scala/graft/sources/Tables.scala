@@ -229,23 +229,11 @@ object Tables {
     }
 }
 
-/** Version-evicting, PER-KEY-LOCKED memo for bounded driver-side
-  * artifacts (trained centroids/codebooks, BPE rules, robust stats) —
-  * the one shared implementation of the at-most-one-live-version
-  * discipline [[Tables.stagedArtifact]] applies to on-disk artifacts.
-  * Per-key cells matter for two reasons: a plain get-then-put races
-  * two first accessors into DUPLICATE training builds (ticking the
-  * trainingBuilds odometer twice and wasting a full Lloyd pass), and
-  * one global monitor would serialize independent builds — the same
-  * hazards the staged-artifact lock fixed. Same-key reentrancy stays
-  * safe SAME-THREAD ONLY; the acquire is timed (the staged-artifact
-  * discipline, ADVICE r11 #3) so a cross-thread reentrant build fails
-  * loudly naming the cell instead of hanging. */
 /** Driver-side memo for BOUNDED index-artifact HEADERS — the ≤nlist
   * centroid table, the ≤K codebook, the 1-row corpus stats — that
   * serving and nightly-append paths read back from immutable staged
-  * artifacts (r17, guide §1.2 fixed overhead / §5 driver): every
-  * `s.read.parquet(header).collect()` is 1-2 scheduler round-trips
+  * artifacts: every `s.read.parquet(header).collect()` is 1-2
+  * scheduler round-trips
   * (~50-100 ms of pure fixed cost at any scale) for ≤100 KB of content
   * that NEVER changes once the artifact is staged. The memo trades
   * that for one driver `listStatus` of the header directory per read:
@@ -291,6 +279,18 @@ object ArtifactHeaders {
   }
 }
 
+/** Version-evicting, PER-KEY-LOCKED memo for bounded driver-side
+  * artifacts (trained centroids/codebooks, BPE rules, robust stats) —
+  * the one shared implementation of the at-most-one-live-version
+  * discipline [[Tables.stagedArtifact]] applies to on-disk artifacts.
+  * Per-key cells matter for two reasons: a plain get-then-put races
+  * two first accessors into DUPLICATE training builds (ticking the
+  * trainingBuilds odometer twice and wasting a full Lloyd pass), and
+  * one global monitor would serialize independent builds — the same
+  * hazards the staged-artifact lock fixed. Same-key reentrancy stays
+  * safe SAME-THREAD ONLY; the acquire is timed (the staged-artifact
+  * discipline) so a cross-thread reentrant build fails loudly naming
+  * the cell instead of hanging. */
 final class VersionMemo[T] {
   private final class Cell {
     val lock = new java.util.concurrent.locks.ReentrantLock

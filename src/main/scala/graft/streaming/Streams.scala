@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.sql.Timestamp
+import graft.operators.Similarity
 
 /** Structured Streaming transfers — the streaming form of the
   * reference's scheduled Transfer loop (reference: config.go:20-21
@@ -77,18 +78,18 @@ object Streams {
     if (tsFromUs) in.withColumn("ts", timestamp_micros(col("ts_us"))) else in
   }
 
-  /** Stages a slice as ONE named json file with a controlled mtime —
-    * the multi-file gates (late data, checkpoint resume) order their
-    * micro-batches by source-file modification time. */
   /** Fresh per-call artifact dir, registered with the boundary janitor
     * (graft.TmpDirs) so a bench sweep cannot accumulate one copy per
-    * rep (ADVICE r9 #4). */
+    * rep. */
   private def callDir(tag: String): String = {
     val p = System.getProperty("java.io.tmpdir") + "/graft_" + tag + "_" + System.nanoTime
     graft.TmpDirs.register(p)
     p
   }
 
+  /** Stages a slice as ONE named json file with a controlled mtime —
+    * the multi-file gates (late data, checkpoint resume) order their
+    * micro-batches by source-file modification time. */
   private def stageNamedFile(df: DataFrame, tmpDir: String, dest: String,
       mtime: Long): Unit = {
     df.coalesce(1).write.json(tmpDir)
@@ -633,12 +634,11 @@ object Streams {
   }
 
   /** Gate query: STREAMING maintenance of the LEXICAL index — the
-    * [[streamIndexAppend]] topology for the BM25 postings (VERDICT r9
-    * #1's lifecycle completed on the text side): the frozen-stats
-    * snapshot stages once per corpus version; tonight's documents land
-    * in two real micro-batches, each tokenizing ONLY its batch and
-    * appending its postings rows idempotently into a per-call delta's
-    * term buckets (bid-keyed purge-then-move — exactly-once in
+    * [[streamIndexAppend]] topology for the BM25 postings: the
+    * frozen-stats snapshot stages once per corpus version; tonight's
+    * documents land in two real micro-batches, each tokenizing ONLY its
+    * batch and appending its postings rows idempotently into a per-call
+    * delta's term buckets (bid-keyed purge-then-move — exactly-once in
     * effect). Tokenize-and-append is stateless and additive, so
     * micro-batch boundaries cannot change the final postings set:
     * serving snapshot ∪ delta after the drain is bit-equal to the
@@ -647,135 +647,57 @@ object Streams {
   def streamBm25IndexAppend(s: SparkSession, dir: String): DataFrame = {
     val snap = graft.operators.TextAnalysis.stagedBm25Snapshot(s, dir)
     val delta = callDir("sbm25")
-    runBm25AppendStream(s, dir, delta)
+    graft.operators.TextAnalysis.appendBm25TonightStream(s, dir, delta)
     graft.operators.TextAnalysis.bm25TopKFrom(s, snap, Some(delta))
   }
 
-  /** The nightly document-batch append stream against term buckets at
-    * `base` — shared by the streaming gate (per-call delta) and the
-    * lexical lifecycle gate (appends into its own full index). */
-  private[graft] def runBm25AppendStream(s: SparkSession, dir: String,
-      base: String): Unit = {
-    val batch = graft.sources.Tables.documents(s, dir)
-      .filter(expr(graft.operators.TextAnalysis.Bm25IncBatchPred))
-      .select(col("doc_id"), col("text"))
+  /** Tonight's `batch` as an append STREAM into the index at `base` —
+    * two real micro-batches (maxFilesPerTrigger=1 over two slices
+    * split on the batch's first, id, column, staged as ndjson with
+    * schema `ddl`), each handed to `publish` with its batch id. One
+    * topology for every maintained index (IVF, IVF-PQ, BM25), driven by
+    * the streaming gates (per-call delta) and the lifecycle gates
+    * (their own full index). `publish` must be idempotent per batch id
+    * (bid-keyed: a replayed micro-batch purges its own files first),
+    * which makes the append exactly-once in effect. */
+  private[graft] def runAppendStream(s: SparkSession, base: String,
+      batch: DataFrame, ddl: String)(publish: (DataFrame, Long) => Unit): Unit = {
+    val id = col(batch.columns.head)
     new java.io.File(s"$base/src").mkdirs()
     val t0 = System.currentTimeMillis()
-    stageNamedFile(batch.filter(col("doc_id") % 20 === 3),
+    stageNamedFile(batch.filter(id % 20 === 3),
       s"$base/t0", s"$base/src/a_slice.json", t0 - 60000)
-    stageNamedFile(batch.filter(col("doc_id") % 20 =!= 3),
+    stageNamedFile(batch.filter(id % 20 =!= 3),
       s"$base/t1", s"$base/src/b_slice.json", t0)
-    val in = s.readStream.schema("doc_id LONG, text STRING")
+    val in = s.readStream.schema(ddl)
       .option("maxFilesPerTrigger", 1).json(s"$base/src")
-    val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      graft.operators.TextAnalysis.appendBm25Idempotent(s, base, mb, bid)
-      ()
-    }.option("checkpointLocation", s"$base/cp")
+    val q = in.writeStream.foreachBatch(publish)
+      .option("checkpointLocation", s"$base/cp")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }
 
-  /** Gate query: STREAMING index maintenance — the nightly append as a
-    * vector stream: the snapshot index (frozen quantizer + snapshot
-    * postings) stages once; tonight's arrivals land in TWO real
-    * micro-batches (maxFilesPerTrigger=1 over two staged slices), each
-    * assigning against the frozen artifact centroids and APPENDING its
-    * postings files — exactly-once via the checkpoint. Assignment is
-    * stateless and appends are additive, so micro-batch boundaries
-    * cannot change the final postings SET: serving after the drain is
-    * bit-equal to the batch `sim_ivf_index_incremental` gate and
-    * shares its oracle verbatim. At 100 TB this is the index's
-    * ingestion topology: a continuous crawl feeds list partitions
-    * while serving reads a consistent snapshot of them; the compactor
+  /** Gate query: STREAMING maintenance of a vector index (float IVF or
+    * IVF-PQ, by codec) — the nightly append as a vector stream: the
+    * snapshot index (frozen header + snapshot postings) stages once;
+    * tonight's arrivals land in TWO real micro-batches, each encoding
+    * against the frozen artifact header and publishing its postings
+    * files idempotently into a per-call delta — the production
+    * topology (last night's artifact + tonight's arrivals), so a bench
+    * rep pays only the marginal append, not a rebuild. Serving the
+    * union after the drain is bit-equal to the batch
+    * `sim_ivf{,_pq}_index_incremental` gate and shares its oracle
+    * verbatim. At 100 TB this is the index's ingestion topology: a
+    * continuous crawl feeds list partitions while serving reads a
+    * consistent snapshot of them; the compactor
     * ([[graft.operators.Similarity.compactIvfIncIndex]]) absorbs the
-    * per-batch small files. Float arrays survive the ndjson hop
-    * bit-exactly (shortest-roundtrip rendering, as streamAnnServing). */
-  def streamIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    // the IMMUTABLE snapshot stages once per corpus version; each call
-    // appends into its own per-call DELTA and serves the union — the
-    // production topology (last night's artifact + tonight's arrivals),
-    // and a bench rep pays only the marginal append, not a rebuild
-    val snap = graft.operators.Similarity.stagedIvfIncSnapshot(s, dir)
-    val delta = callDir("sidx")
-    runIndexAppendStream(s, dir, delta, snap)
-    graft.operators.Similarity.ivfServeUnion(s, dir, snap, delta)
-  }
-
-  /** The nightly-batch append STREAM against an existing snapshot
-    * index at `base` — two real micro-batches (maxFilesPerTrigger=1
-    * over two staged slices), each assigning against the frozen
-    * artifact centroids and publishing idempotently (bid-keyed: a
-    * replayed micro-batch purges its own files first, so the append is
-    * exactly-once in effect). Extracted so the composite lifecycle
-    * gate drives the SAME topology the streaming gate drains. */
-  private[graft] def runIndexAppendStream(s: SparkSession, dir: String,
-      base: String, artifactBase: String = null): Unit = {
-    val art = Option(artifactBase).getOrElse(base)
-    val batch = graft.sources.Tables.embeddings(s, dir)
-      .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    new java.io.File(s"$base/src").mkdirs()
-    val t0 = System.currentTimeMillis()
-    stageNamedFile(batch.filter(col("cand_id") % 20 === 3),
-      s"$base/t0", s"$base/src/a_slice.json", t0 - 60000)
-    stageNamedFile(batch.filter(col("cand_id") % 20 =!= 3),
-      s"$base/t1", s"$base/src/b_slice.json", t0)
-    val in = s.readStream.schema("cand_id LONG, c_emb ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1).json(s"$base/src")
-    val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      graft.operators.Similarity.appendIvfIncVectorsIdempotent(s, base, mb, bid, art)
-      ()
-    }.option("checkpointLocation", s"$base/cp")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Gate query: STREAMING maintenance of the COMPRESSED index — the
-    * [[streamIndexAppend]] topology for the IVFPQ artifact: the
-    * snapshot (frozen quantizer + PQ codebook + snapshot code
-    * postings) stages once; tonight's arrivals land in two real
-    * micro-batches, each ENCODING against the frozen artifact (both
-    * stages read back from the index files — the append job owns zero
-    * training state) and appending (cand_id, codes) files —
-    * exactly-once via the checkpoint. Encoding is stateless and
-    * appends are additive, so micro-batch boundaries cannot change the
-    * final code set: serving after the drain is bit-equal to the batch
-    * `sim_ivf_pq_index_incremental` gate and shares its oracle
-    * verbatim. At 100 TB this closes the compressed index's ingestion
-    * topology — a continuous crawl feeds 2-byte-code lists while
-    * serving reads a consistent snapshot, and the compactor absorbs
-    * the per-batch small files. */
-  def streamPqIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    // snapshot-once + per-call delta, as streamIndexAppend
-    val snap = graft.operators.Similarity.stagedIvfPqIncSnapshot(s, dir)
-    val delta = callDir("spqidx")
-    runPqIndexAppendStream(s, dir, delta, snap)
-    graft.operators.Similarity.ivfPqServeUnion(s, dir, snap, delta)
-  }
-
-  /** The nightly encode-and-append stream for the COMPRESSED index —
-    * shared by the streaming gate (per-call delta) and the IVFPQ
-    * lifecycle gate (appends into its own full index). */
-  private[graft] def runPqIndexAppendStream(s: SparkSession, dir: String,
-      base: String, artifactBase: String = null): Unit = {
-    val art = Option(artifactBase).getOrElse(base)
-    val batch = graft.sources.Tables.embeddings(s, dir)
-      .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    new java.io.File(s"$base/src").mkdirs()
-    val t0 = System.currentTimeMillis()
-    stageNamedFile(batch.filter(col("cand_id") % 20 === 3),
-      s"$base/t0", s"$base/src/a_slice.json", t0 - 60000)
-    stageNamedFile(batch.filter(col("cand_id") % 20 =!= 3),
-      s"$base/t1", s"$base/src/b_slice.json", t0)
-    val in = s.readStream.schema("cand_id LONG, c_emb ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1).json(s"$base/src")
-    val q = in.writeStream.foreachBatch { (mb: DataFrame, bid: Long) =>
-      graft.operators.Similarity.appendIvfPqIncVectorsIdempotent(s, base, mb, bid, art)
-      ()
-    }.option("checkpointLocation", s"$base/cp")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    * per-batch small files. */
+  private[graft] def streamIndexAppend(c: Similarity.IndexCodec)(
+      s: SparkSession, dir: String): DataFrame = {
+    val snap = Similarity.stagedSnapshot(c)(s, dir)
+    val delta = callDir(s"s${c.tag}app")
+    Similarity.appendTonightStream(c)(s, dir, delta, snap)
+    Similarity.serveFrom(c)(s, dir, snap, delta)
   }
 
   /** Gate query: streaming ANOMALY SCORING — the monitoring shape

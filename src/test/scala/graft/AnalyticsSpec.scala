@@ -195,17 +195,6 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
-  test("Observation-based transfer meta matches a direct recount (etly Meta analog)") {
-    val (df, obs) = operators.Observability.observedTransfer(spark, sf)
-    val processedRows = df.count() // action populates the observation
-    val meta = operators.Observability.metaOf(obs)
-    val e = Tables.events(spark, sf)
-    assert(meta.recordTotal == e.count())
-    assert(meta.recordProcessed == processedRows)
-    assert(meta.recordSkipped == e.filter(col("event_type") === "error").count())
-    assert(meta.recordTotal == meta.recordProcessed + meta.recordSkipped)
-  }
-
   test("as-of join: prior click is a click, precedes the error, same user") {
     val e = Tables.events(spark, sf).select(
       col("event_id"), col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))

@@ -986,7 +986,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("incremental IVF index: append is batch-only, snapshot files untouched, drift-gated") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_ivfinc_${System.nanoTime}"
-    Similarity.buildIvfIncSnapshot(spark, sf, base)
+    Similarity.buildIncSnapshot(Similarity.Float)(spark, sf, base)
     def listing(p: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -994,7 +994,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = listing(s"$base/postings")
-    Similarity.appendIvfIncBatch(spark, sf, base)
+    Similarity.appendIncBatch(Similarity.Float)(spark, sf, base)
     val after = listing(s"$base/postings")
     // the append only ADDS files into the inverted-list dirs — every
     // snapshot postings file survives byte-identical (name + mtime)
@@ -1012,7 +1012,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .replace("vec_id", "cand_id"))).count() == batchN,
       "appended postings must carry exactly the batch vectors")
     // serving prunes the postings partitions like the one-shot index
-    val served = Similarity.ivfIncTopK(spark, sf)
+    val served = Similarity.incTopK(Similarity.Float)(spark, sf)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       "incremental-index serving must DPP-prune the postings scan")
@@ -1064,22 +1064,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_life_${System.nanoTime}"
     // the one and only training pass: the snapshot build (memo-warm or
     // not — what matters is the MAINTENANCE passes below add nothing)
-    Similarity.buildIvfIncSnapshot(spark, sf, base)
+    Similarity.buildIncSnapshot(Similarity.Float)(spark, sf, base)
     val trained = Similarity.trainingBuilds.get()
-    graft.streaming.Streams.runIndexAppendStream(spark, sf, base)
+    Similarity.appendTonightStream(Similarity.Float)(spark, sf, base, base)
     val retrain = Similarity.ivfIncDriftReportFrom(spark, sf, base)
       .head().getAs[Boolean]("retrain")
     assert(!retrain, "gate corpus must take the append branch")
     val compacted = Similarity.compactIvfIncIndex(spark, base)
     assert(compacted.nonEmpty,
       "the streamed appends must have fattened at least one list")
-    val served = Similarity.ivfServeForSpec(spark, base, sf)
+    val served = Similarity.serveFrom(Similarity.Float)(spark, sf, base)
       .collect().map(_.toString).toSet
     assert(Similarity.trainingBuilds.get() == trained,
       "append/drift/compact/serve must run ZERO training jobs — they consume artifacts")
     // the composed lifecycle serves exactly what the plain incremental
     // gate serves (both hash-equal to the frozen-quantizer rebuild)
-    val inc = Similarity.ivfIncTopK(spark, sf).collect().map(_.toString).toSet
+    val inc = Similarity.incTopK(Similarity.Float)(spark, sf).collect().map(_.toString).toSet
     assert(served == inc, "lifecycle serving must equal the incremental gate")
     CacheScope.releaseAll(spark)
   }
@@ -1104,7 +1104,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       s"every shifted-batch vector must sit on its own retrained centroid, min cos $batchMin")
     // the plain (unbalanced-free) maintained index takes the append
     // branch under the same bar
-    val rep = Similarity.ivfIncImbalanceReport(spark, sf).head()
+    val rep = Similarity.imbalanceReport(Similarity.Float)(spark, sf).head()
     assert(!rep.getAs[Boolean]("retrain"),
       s"the gate corpus's maintained index must read balanced: $rep")
     val trained = Similarity.trainingBuilds.get()
@@ -1118,8 +1118,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // coarse assignment ignores the codes, so the compressed artifact's
     // per-list counts must be IDENTICAL to the uncompressed report —
     // and the natural corpus reads balanced on both
-    val pq = Similarity.ivfPqIncImbalanceReport(spark, sf).head()
-    val ivf = Similarity.ivfIncImbalanceReport(spark, sf).head()
+    val pq = Similarity.imbalanceReport(Similarity.Pq)(spark, sf).head()
+    val ivf = Similarity.imbalanceReport(Similarity.Float)(spark, sf).head()
     assert(pq == ivf,
       s"code postings must carry the same assignment counts: $pq vs $ivf")
     assert(!pq.getAs[Boolean]("retrain"),
@@ -1145,10 +1145,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(header == recount,
         s"size header drifted from the postings truth at $base")
     }
-    countsOf(Similarity.stagedIvfIncIndex(spark, sf),
+    countsOf(Similarity.stagedIncIndex(Similarity.Float)(spark, sf),
       "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT")
-    countsOf(Similarity.stagedIvfPqIncIndex(spark, sf),
-      Similarity.PqPostingsSchema)
+    countsOf(Similarity.stagedIncIndex(Similarity.Pq)(spark, sf),
+      Similarity.Pq.postingsSchema)
     CacheScope.releaseAll(spark)
   }
 
@@ -1289,7 +1289,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // once per corpus version), then prove the fusion itself is pure
     // artifact consumption
     graft.operators.TextAnalysis.stagedBm25LifecycleIndex(spark, sf)
-    Similarity.stagedIvfLifecycleIndex(spark, sf)
+    Similarity.stagedLifecycleIndex(Similarity.Float)(spark, sf)
     val trained = Similarity.trainingBuilds.get()
     val fused = Similarity.hybridLifecycleTopK(spark, sf).collect()
     assert(fused.length == Similarity.HybridK)
@@ -1325,9 +1325,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("IVFPQ lifecycle composition serves exactly the incremental gate's results") {
-    val life = Similarity.ivfPqLifecycleTopK(spark, sf)
+    val life = Similarity.lifecycleTopK(Similarity.Pq)(spark, sf)
       .collect().map(_.toString).toSet
-    val inc = Similarity.ivfPqIncTopK(spark, sf)
+    val inc = Similarity.incTopK(Similarity.Pq)(spark, sf)
       .collect().map(_.toString).toSet
     assert(life == inc,
       "composed IVFPQ lifecycle must serve the incremental gate's results")
@@ -1397,7 +1397,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("index compaction: fat lists collapse to one file, thin lists untouched, serving bit-equal") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_cmp_${System.nanoTime}"
-    Similarity.buildIvfIncIndex(spark, sf, base)
+    Similarity.buildIncIndex(Similarity.Float)(spark, sf, base)
     def dirs(p: String): Map[String, Seq[java.io.File]] =
       new java.io.File(p).listFiles().filter(_.isDirectory)
         .filter(_.getName.startsWith("cent_id="))
@@ -1407,7 +1407,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val before = dirs(s"$base/postings")
     val thin = before.filter(_._2.size <= 1).keySet
     assert(before.exists(_._2.size > 1), "appended index must have multi-file lists to compact")
-    val served0 = Similarity.ivfServeForSpec(spark, base, sf).collect().map(_.toString).toSet
+    val served0 = Similarity.serveFrom(Similarity.Float)(spark, sf, base).collect().map(_.toString).toSet
     val compacted = Similarity.compactIvfIncIndex(spark, base)
     assert(compacted.nonEmpty, "compactor must select the fat lists")
     val after = dirs(s"$base/postings")
@@ -1419,13 +1419,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
       val a = after(d).map(f => (f.getName, f.lastModified()))
       assert(a == b, s"thin list $d must be untouched by compaction")
     }
-    val served1 = Similarity.ivfServeForSpec(spark, base, sf).collect().map(_.toString).toSet
+    val served1 = Similarity.serveFrom(Similarity.Float)(spark, sf, base).collect().map(_.toString).toSet
     assert(served1 == served0, "compaction must not change serving results")
   }
 
   test("IVFPQ compaction: fat code lists collapse, thin untouched, serving bit-equal") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_pqcmp_${System.nanoTime}"
-    Similarity.buildIvfPqIncIndex(spark, sf, base)
+    Similarity.buildIncIndex(Similarity.Pq)(spark, sf, base)
     def dirs(p: String): Map[String, Seq[java.io.File]] =
       new java.io.File(p).listFiles().filter(_.isDirectory)
         .filter(_.getName.startsWith("cent_id="))
@@ -1435,10 +1435,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val before = dirs(s"$base/postings")
     val thin = before.filter(_._2.size <= 1).keySet
     assert(before.exists(_._2.size > 1), "appended PQ index must have multi-file lists")
-    val served0 = Similarity.ivfPqServeForSpec(spark, sf, base)
+    val served0 = Similarity.serveFrom(Similarity.Pq)(spark, sf, base)
       .collect().map(_.toString).toSet
     val compacted = Similarity.compactIvfIncIndex(spark, base,
-      rowSchema = Similarity.PqPostingsSchema)
+      rowSchema = Similarity.Pq.postingsSchema)
     assert(compacted.nonEmpty, "compactor must select the fat code lists")
     dirs(s"$base/postings").foreach { case (d, fsAfter) =>
       if (thin(d))
@@ -1447,14 +1447,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
           s"thin list $d must be untouched")
       else assert(fsAfter.size == 1, s"$d still has ${fsAfter.size} files")
     }
-    val served1 = Similarity.ivfPqServeForSpec(spark, sf, base)
+    val served1 = Similarity.serveFrom(Similarity.Pq)(spark, sf, base)
       .collect().map(_.toString).toSet
     assert(served1 == served0, "PQ compaction must not change serving results")
   }
 
   test("incremental IVFPQ index: batch codes append-only, serving reads codes with DPP") {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_pqinc_${System.nanoTime}"
-    Similarity.buildIvfPqIncSnapshot(spark, sf, base)
+    Similarity.buildIncSnapshot(Similarity.Pq)(spark, sf, base)
     def listing(p: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
@@ -1462,13 +1462,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .map(f => f.getPath -> f.lastModified()).toMap
     }
     val before = listing(s"$base/postings")
-    Similarity.appendIvfPqIncBatch(spark, sf, base)
+    Similarity.appendIncBatch(Similarity.Pq)(spark, sf, base)
     val after = listing(s"$base/postings")
     before.foreach { case (p, m) =>
       assert(after.get(p).contains(m), s"snapshot code file rewritten: $p")
     }
     assert(after.size > before.size, "append must add batch code files")
-    val served = Similarity.ivfPqIncTopK(spark, sf)
+    val served = Similarity.incTopK(Similarity.Pq)(spark, sf)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.toLowerCase.contains("dynamicpruning"),
       "incremental IVFPQ serving must DPP-prune the postings scan")
@@ -1669,25 +1669,45 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("idempotent index append: a replayed micro-batch converges instead of duplicating") {
     // the foreachBatch failure mode: batch commits its files, the
     // streaming offset does not, the batch REPLAYS — a blind append
-    // would duplicate every row; the bid-keyed publish must converge
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_idem_${System.nanoTime}"
-    Similarity.buildIvfIncSnapshot(spark, sf, base)
-    val batch = Tables.embeddings(spark, sf)
-      .filter(expr(graft.operators.Similarity.IvfIncBatchPred))
+    // would duplicate every row; the bid-keyed publish must converge,
+    // for every maintained index family
+    import org.apache.spark.sql.DataFrame
+    val vecs = Tables.embeddings(spark, sf)
+      .filter(expr(Similarity.IvfIncBatchPred))
       .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    Similarity.appendIvfIncVectorsIdempotent(spark, base, batch, 7L)
-    val n1 = spark.read.parquet(s"$base/postings").count()
-    val served1 = Similarity.ivfServeForSpec(spark, base, sf)
-      .collect().map(_.toString).toSet
-    Similarity.appendIvfIncVectorsIdempotent(spark, base, batch, 7L) // replay
-    assert(spark.read.parquet(s"$base/postings").count() == n1,
-      "replaying the same bid must not add rows")
-    assert(Similarity.ivfServeForSpec(spark, base, sf)
-      .collect().map(_.toString).toSet == served1,
-      "serving must be unchanged after a replay")
-    // and the result equals the batch-maintained index
-    assert(served1 == graft.operators.Similarity.ivfIncTopK(spark, sf)
-      .collect().map(_.toString).toSet)
+    val docs = Tables.documents(spark, sf)
+      .filter(expr(TextAnalysis.Bm25IncBatchPred))
+      .select(col("doc_id"), col("text"))
+    final case class Family(name: String, snapshot: String => Unit,
+        publish: (String, Long) => Unit, serve: String => DataFrame,
+        gate: () => DataFrame)
+    val vectorFamilies = Seq(Similarity.Float, Similarity.Pq).map(c =>
+      Family(c.tag, Similarity.buildIncSnapshot(c)(spark, sf, _),
+        (base, bid) => Similarity.appendIdempotent(c)(spark, base, vecs, bid, base),
+        Similarity.serveFrom(c)(spark, sf, _),
+        () => Similarity.incTopK(c)(spark, sf)))
+    val bm25 = Family("bm25",
+      base => TextAnalysis.buildBm25Index(spark, sf, base,
+        Some(s"NOT (${TextAnalysis.Bm25IncBatchPred})")),
+      (base, bid) => TextAnalysis.appendBm25Idempotent(spark, base, docs, bid),
+      TextAnalysis.bm25TopKFrom(spark, _),
+      () => TextAnalysis.bm25IndexIncTopK(spark, sf))
+    for (f <- vectorFamilies :+ bm25) {
+      val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_idem_${f.name}_${System.nanoTime}"
+      def rows(df: DataFrame) = df.collect().map(_.toString).toSet
+      f.snapshot(base)
+      f.publish(base, 7L)
+      val n1 = spark.read.parquet(s"$base/postings").count()
+      val served1 = rows(f.serve(base))
+      f.publish(base, 7L) // replay
+      assert(spark.read.parquet(s"$base/postings").count() == n1,
+        s"${f.name}: replaying the same bid must not add rows")
+      assert(rows(f.serve(base)) == served1,
+        s"${f.name}: serving must be unchanged after a replay")
+      assert(served1 == rows(f.gate()),
+        s"${f.name}: the replayed index must serve the batch-maintained gate's rows")
+    }
+    CacheScope.releaseAll(spark)
   }
 
   test("incremental SemDeDup: snapshot verdicts immutable, state reused, batch fully verdicted") {
@@ -1807,10 +1827,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // nothing at all on the second nightly run
     graft.operators.TextAnalysis.stagedBm25IncIndex(spark, sf)
     graft.operators.TextAnalysis.stagedBm25CompactIndex(spark, sf)
-    Similarity.stagedIvfIncIndex(spark, sf)
-    Similarity.stagedIvfCompactIndex(spark, sf)
-    Similarity.stagedIvfPqIncIndex(spark, sf)
-    Similarity.stagedIvfPqCompactIndex(spark, sf)
+    Similarity.stagedIncIndex(Similarity.Float)(spark, sf)
+    Similarity.stagedCompactIndex(Similarity.Float)(spark, sf)
+    Similarity.stagedIncIndex(Similarity.Pq)(spark, sf)
+    Similarity.stagedCompactIndex(Similarity.Pq)(spark, sf)
     Similarity.stagedIvfSkewedIndex(spark, sf)
     Similarity.stagedIvfRetrainIndex(spark, sf)
     val trained = Similarity.trainingBuilds.get()
@@ -1991,12 +2011,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))
-    val out = Similarity.ivfPqTwoNightTopK(spark, sf).collect()
+    val out = Similarity.twoNightTopK(Similarity.Pq)(spark, sf).collect()
     def night(n: Long) =
       out.filter(_.getAs[Long]("night") == n).map(keyOf).toSet
     // night 2 = the full incremental corpus — must serve row-identical
     // to the plain compressed incremental gate
-    val incRows = Similarity.ivfPqIncTopK(spark, sf).collect().map(keyOf).toSet
+    val incRows = Similarity.incTopK(Similarity.Pq)(spark, sf).collect().map(keyOf).toSet
     assert(night(2L) == incRows,
       "night-2 compressed serving must equal the one-shot incremental build")
     // night 1: one-shot frozen-quantizer-and-codebook build over
@@ -2004,12 +2024,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the code-list compaction's row preservation
     val oneShotBase =
       java.nio.file.Files.createTempDirectory("pqtwonight").toString
-    Similarity.buildIvfPqIncSnapshot(spark, sf, oneShotBase)
-    Similarity.appendIvfPqIncVectors(spark, oneShotBase,
+    Similarity.buildIncSnapshot(Similarity.Pq)(spark, sf, oneShotBase)
+    Similarity.appendVectors(Similarity.Pq)(spark, oneShotBase,
       Tables.embeddings(spark, sf)
         .filter(expr(Similarity.IvfNight1Pred))
         .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-    val oneShot = Similarity.ivfPqServeForSpec(spark, sf, oneShotBase)
+    val oneShot = Similarity.serveFrom(Similarity.Pq)(spark, sf, oneShotBase)
       .collect().map(keyOf).toSet
     assert(night(1L) == oneShot,
       "night-1 promotion serving must equal the one-shot build over snapshot+night1")
@@ -2020,24 +2040,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
     def keyOf(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"),
         r.getAs[Double]("cosine"), r.getAs[Long]("rank"))
-    val out = Similarity.ivfTwoNightTopK(spark, sf).collect()
+    val out = Similarity.twoNightTopK(Similarity.Float)(spark, sf).collect()
     def night(n: Long) =
       out.filter(_.getAs[Long]("night") == n).map(keyOf).toSet
     // night 2 = the full incremental corpus — must serve row-identical
     // to the plain incremental gate
-    val incRows = Similarity.ivfIncTopK(spark, sf).collect().map(keyOf).toSet
+    val incRows = Similarity.incTopK(Similarity.Float)(spark, sf).collect().map(keyOf).toSet
     assert(night(2L) == incRows,
       "night-2 serving must equal the one-shot incremental build")
     // night 1: one-shot frozen build over snapshot + night-1 arrivals,
     // UNCOMPACTED — equality also pins compaction row-preservation
     val oneShotBase =
       java.nio.file.Files.createTempDirectory("twonight").toString
-    Similarity.buildIvfIncSnapshot(spark, sf, oneShotBase)
-    Similarity.appendIvfIncVectors(spark, oneShotBase,
+    Similarity.buildIncSnapshot(Similarity.Float)(spark, sf, oneShotBase)
+    Similarity.appendVectors(Similarity.Float)(spark, oneShotBase,
       Tables.embeddings(spark, sf)
         .filter(expr(Similarity.IvfNight1Pred))
         .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb")))
-    val oneShot = Similarity.ivfServeForSpec(spark, oneShotBase, sf)
+    val oneShot = Similarity.serveFrom(Similarity.Float)(spark, sf, oneShotBase)
       .collect().map(keyOf).toSet
     assert(night(1L) == oneShot,
       "night-1 promotion serving must equal the one-shot build over snapshot+night1")

@@ -109,6 +109,28 @@ class StagedVersionSpec extends AnyFunSuite {
     assert(outer != null && inner.get() != null)
   }
 
+  test("a staged build prints one [staged] stderr line; a memo hit prints none") {
+    // the build log is a parsed contract: the benchmark harness counts
+    // builds from these lines to tell a re-staging serve from a warm one
+    val line = """^\[staged\] (\S+)\s+(\d+\.\d+) s  (.+)$""".r
+    val tag = s"speclog_${System.nanoTime}"
+    val dir = "/spec/corpus"
+    val err = new java.io.ByteArrayOutputStream
+    val orig = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val (built, hit) =
+      try {
+        Tables.stagedArtifact(tag, dir, "v1") { base => base }
+        val first = err.toString("UTF-8")
+        Tables.stagedArtifact(tag, dir, "v1") { _ => fail("a memo hit must not rebuild") }
+        (first, err.toString("UTF-8").stripPrefix(first))
+      } finally System.setErr(orig)
+    val matched = built.linesIterator.collect { case line(t, _, d) => (t, d) }.toSeq
+    assert(matched == Seq((tag, dir)),
+      s"expected exactly one [staged] line for ($tag, $dir), got:\n$built")
+    assert(hit.isEmpty, s"a memo hit must print nothing, got:\n$hit")
+  }
+
   test("VersionMemo runs ONE build under concurrent first access") {
     // a plain get-then-put memo raced two first accessors into
     // DUPLICATE training builds (double trainingBuilds ticks, a wasted
@@ -135,7 +157,7 @@ class StagedVersionSpec extends AnyFunSuite {
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_spec_ver_ivf_${System.nanoTime}"
     val postingsSchema = "cand_id BIGINT, c_emb ARRAY<FLOAT>, cent_id BIGINT"
     Tables.embeddings(spark, sf).write.parquet(s"$base/embeddings.parquet")
-    val b1 = graft.operators.Similarity.stagedIvfCompactIndex(spark, base)
+    val b1 = graft.operators.Similarity.stagedCompactIndex(graft.operators.Similarity.Float)(spark, base)
     val n1 = spark.read.schema(postingsSchema).parquet(s"$b1/postings").count()
     assert(n1 == Tables.embeddings(spark, base).filter(col("vec_id") >= 10).count())
     // corpus RE-STAGED in place: half the vectors, same directory — the
@@ -144,7 +166,7 @@ class StagedVersionSpec extends AnyFunSuite {
     // the staging DIR now carries the full fingerprint too)
     Tables.embeddings(spark, sf).filter(col("vec_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
-    val b2 = graft.operators.Similarity.stagedIvfCompactIndex(spark, base)
+    val b2 = graft.operators.Similarity.stagedCompactIndex(graft.operators.Similarity.Float)(spark, base)
     assert(b2 != b1, "mutated corpus must stage a NEW index dir, not alias the old one")
     val n2 = spark.read.schema(postingsSchema).parquet(s"$b2/postings").count()
     val fresh = Tables.embeddings(spark, base).filter(col("vec_id") >= 10).count()
